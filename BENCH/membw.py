@@ -10,7 +10,7 @@ throughput scaling of the whole pipeline ON THIS BOX — a real cluster
 adds a memory bus per node, which is what the ≥0.8 target assumes.
 
 Usage: python BENCH/membw.py --procs 2 [--seconds 6]
-Appends one JSON line to BENCH/membw_runs.jsonl.
+Prints one JSON line; bench.py records its readings as `probe_gb_s`.
 """
 
 from __future__ import annotations
@@ -18,7 +18,6 @@ from __future__ import annotations
 import argparse
 import json
 import multiprocessing as mp
-import os
 import time
 
 
@@ -52,11 +51,7 @@ def main() -> None:
     for p in ps:
         p.join()
     agg = sum(rates) / 1e9
-    rec = {"procs": args.procs, "agg_gb_per_sec": round(agg, 2)}
-    runs = os.path.join(os.path.dirname(os.path.abspath(__file__)), "membw_runs.jsonl")
-    with open(runs, "a") as f:
-        f.write(json.dumps(rec) + "\n")
-    print(json.dumps(rec))
+    print(json.dumps({"procs": args.procs, "agg_gb_per_sec": round(agg, 2)}))
 
 
 if __name__ == "__main__":

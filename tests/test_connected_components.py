@@ -4,6 +4,8 @@ union-find oracle."""
 
 from __future__ import annotations
 
+import random
+
 import pytest
 
 from wikidata_wikifier_spark.operators.connected_components import (
@@ -28,6 +30,14 @@ def uf_oracle(edges: list[tuple[str, str]]) -> dict[str, str]:
     return {n: find(n) for n in parent}
 
 
+def shuffled_chain(n: int, seed: int) -> list[tuple[str, str]]:
+    """A path whose node ids are in random order along it: min-label
+    propagation needs many more rounds than on an id-sorted chain."""
+    ids = [f"S{i:03d}" for i in range(n)]
+    random.Random(seed).shuffle(ids)
+    return list(zip(ids, ids[1:]))
+
+
 GRAPHS = {
     "chain": [(f"Q{i:03d}", f"Q{i+1:03d}") for i in range(0, 99)],
     "cycle": [(f"C{i}", f"C{(i+1) % 7}") for i in range(7)],
@@ -39,6 +49,7 @@ GRAPHS = {
     ],
     "star": [("HUB", f"S{i:02d}") for i in range(20)],
     "self_loops_and_dups": [("X", "X"), ("X", "Y"), ("Y", "X"), ("X", "Y")],
+    "shuffled_chain": shuffled_chain(100, seed=7),
 }
 
 

@@ -10,7 +10,8 @@ from wikidata_wikifier_spark import datagen
 from wikidata_wikifier_spark.job import main
 
 
-def test_job_main(spark, tmp_path, capsys, monkeypatch):
+def write_inputs(spark, tmp_path) -> list[str]:
+    """Small source/index/edges tables → the job's input arguments."""
     src, _ = datagen.source_repos_df(spark, n_repos=8, n_entities=60)
     idx = datagen.entity_index_df(spark, n_entities=60)
     edges = datagen.alias_edges_df(spark, n_entities=60)
@@ -18,12 +19,14 @@ def test_job_main(spark, tmp_path, capsys, monkeypatch):
     src.write.parquet(src_p)
     idx.write.parquet(idx_p)
     edges.write.parquet(edg_p)
-    out = str(tmp_path / "out")
+    return ["--source", src_p, "--index", idx_p, "--edges", edg_p]
 
+
+def test_job_main(spark, tmp_path, capsys, monkeypatch):
+    out = str(tmp_path / "out")
     monkeypatch.setattr(
         sys, "argv",
-        ["job", "--source", src_p, "--index", idx_p, "--edges", edg_p,
-         "--out", out, "--resume"],
+        ["job", *write_inputs(spark, tmp_path), "--out", out, "--resume"],
     )
     main()
     stats = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
@@ -37,6 +40,29 @@ def test_job_main(spark, tmp_path, capsys, monkeypatch):
     stats2 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert stats2["n_triples"] == 0
     assert stats2["skipped_parts"] == stats["written_parts"]
+
+
+def test_job_checkpoint_dir(spark, tmp_path, monkeypatch):
+    """--checkpoint-dir turns the pipeline's barriers into reliable
+    checkpoints under that directory, with the same triples as a run
+    without it."""
+    args = write_inputs(spark, tmp_path)
+    ckpt = tmp_path / "ckpt"
+    triples = {}
+    for name, extra in (("local", []), ("reliable", ["--checkpoint-dir", str(ckpt)])):
+        out = str(tmp_path / name)
+        monkeypatch.setattr(sys, "argv", ["job", *args, "--out", out, *extra])
+        try:
+            main()
+        finally:
+            # the checkpoint dir is SparkContext state: unset it so later
+            # tests in this session keep local barriers
+            spark.sparkContext.setCheckpointDir(None)
+        triples[name] = sorted(
+            map(tuple, spark.read.parquet(out + "/triples").collect())
+        )
+    assert triples["local"] and triples["reliable"] == triples["local"]
+    assert [f for f in ckpt.rglob("part-*") if f.is_file()]
 
 
 def test_iceberg_branch_fails_actionably_without_catalog(spark, tmp_path):

@@ -202,10 +202,9 @@ def test_sql_string_forms_match_column_forms(spark):
 def test_distinct_char_ngrams_matches_native(spark):
     """The Arrow-batch char-ngram builder must equal
     array_distinct(char_ngrams(norm_text(·), 4)) element-for-element
-    (incl. order) on real docs and edge cases. BMP content only — on
-    non-BMP text the native Java form counts UTF-16 units while the
-    Arrow form (like the DuckDB oracle's substr) counts code points,
-    which is the documented oracle-true semantics."""
+    (incl. order) on real docs and edge cases. Both slice by code point
+    (Spark's UTF8String is code-point based), so the non-BMP row must
+    match too."""
     from wikidata_wikifier_spark.functions.hashing import char_ngrams
     from wikidata_wikifier_spark.operators.dedup import (
         distinct_char_ngrams,
@@ -222,6 +221,7 @@ def test_distinct_char_ngrams_matches_native(spark):
             (900005, "  AbCd   efGh  "),
             (900006, "aaaaaaaa"),
             (900007, "héllo wörld ünïcode"),
+            (900008, "a😀bc😀d"),
         ],
         "doc_id long, text string",
     )

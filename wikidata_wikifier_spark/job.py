@@ -10,11 +10,12 @@ spark-submit --py-files on multi-executor clusters").
         --index   <path of entity index> \\
         --edges   <path of sameAs edges (src,dst)> \\
         --out     <output dir: triples/ + _manifest/> \\
-        [--resume] [--k 1]
+        [--resume] [--k 1] [--checkpoint-dir <dir>]
 
 On a cluster the session comes from spark-submit's conf (no master
-override here); localCheckpoint barriers inside the pipeline should be
-switched to reliable checkpointing by setting --checkpoint-dir.
+override here). --checkpoint-dir sets the session's checkpoint directory,
+which makes every materialization barrier (plans/barrier.py) a reliable
+checkpoint there, so a lost executor does not lose barrier data.
 """
 
 from __future__ import annotations

@@ -22,9 +22,8 @@ label.
 
 generate_candidates computes the two expensive shared intermediates — the
 exploded alias index and the prefix-filtered string-pair scores — ONCE and
-materializes them (localCheckpoint; checkpoint() to reliable storage on a
-real cluster), instead of letting the 4-strategy union re-evaluate them
-2-4×.
+materializes them (plans/barrier.py), instead of letting the 4-strategy
+union re-evaluate them 2-4×.
 
 All scoring rules here are deterministic and mirrored in the DuckDB oracle
 (oracles.py) for driver verification.
@@ -37,6 +36,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import char_ngrams, edge_ngrams
 from ..functions.strings import clean_label, levenshtein_similarity
+from ..plans.barrier import barrier
 from ..plans.skew import size_aware_broadcast
 
 EDGE_MIN, EDGE_MAX = 3, 10
@@ -243,20 +243,14 @@ def _scored_string_pairs(
     and is immediately capped per mention."""
     aidx = aidx if aidx is not None else _alias_index(index)
     # a_str is referenced 3x (gram_df, prefix explode, verify join-back)
-    # and its subtree is a distinct exchange + interpreted char-ngram
-    # lambda per alias — the multi-reference + interpreted-heavy shape
-    # where a barrier pays (measured A/B: 1.7-1.8 -> 1.3-1.4s noop at the
-    # 10x replica, consistent at sf0.1; contrast the minhash signature
-    # barrier, measured WORSE — its subtree is codegen'd aggregates AQE
-    # already reuses). Cluster form: checkpoint()/persist to reliable
-    # storage, same seam as plans/checkpoint.py.
-    a_str = (
+    # over a distinct exchange + interpreted char-ngram lambda per alias
+    # (measured A/B: 1.7-1.8 -> 1.3-1.4s noop at the 10x replica)
+    a_str = barrier(
         aidx.select("alias_norm")
         .distinct()
         .withColumn("ag", F.array_distinct(char_ngrams(F.col("alias_norm"), 3)))
         .withColumn("n_a", F.size("ag"))
         .where(F.col("n_a") > 0)
-        .localCheckpoint()
     )
     m_str = (
         mentions.select("label_clean")
@@ -414,7 +408,7 @@ def label_candidates(
     granularity (pipeline.wikify) and fan out to mentions only at the very
     end. Returns (lab_cands, idx_rows)."""
     idx = _apply_isa(index, isa)
-    aidx = _alias_index(idx).localCheckpoint()
+    aidx = barrier(_alias_index(idx))
     idx_rows = aidx.count()  # exact size → size-aware broadcast decisions
 
 
@@ -426,7 +420,7 @@ def label_candidates(
     # (thousands of rows where the corpus has billions of mentions), and
     # the candidate table materializes in ONE label-keyed join at the very
     # end — zero corpus-scale shuffles in candidate generation.
-    m_str = m_str.select("label_clean").distinct().localCheckpoint()
+    m_str = barrier(m_str.select("label_clean").distinct())
     # the label table is vocabulary-scale and just materialized — one
     # cheap count makes every strategy join broadcast the smaller side
     # (the exploded index tables are entity-scale: 600k aliases / 4.8M
@@ -495,7 +489,7 @@ def label_candidates(
     # the thresholded string matches are vocabulary-pair-scale — one
     # cheap materialization + count makes them the broadcast side instead
     # of building the entity-scale alias hash relation
-    str_m = str_m.localCheckpoint()
+    str_m = barrier(str_m)
     ls, ras = _hint_smaller(str_m, str_m.count(), aliases, idx_rows)
     tf_s = (
         ls.join(ras, "alias_norm")
@@ -556,11 +550,9 @@ def generate_candidates(
 
     1. The exploded alias index (used by all strategies) and the
        prefix-filtered string-pair scores (used by trigram AND fuzzy) are
-       computed ONCE and materialized with localCheckpoint — Spark shares
+       computed ONCE and materialized by a barrier — Spark shares
        nothing between branches of a union, so without the barrier those
-       jobs re-run per strategy. On a multi-executor cluster this becomes
-       checkpoint()/persist(DISK) to survive executor loss (the engine's
-       resume story, plans/checkpoint.py).
+       jobs re-run per strategy.
     2. The trigram and fuzzy thresholds are applied to the SAME
        string-match table and expanded to (mention, qnode) through ONE
        mention⨝pairs⨝alias join instead of two.

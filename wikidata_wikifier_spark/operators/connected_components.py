@@ -7,27 +7,32 @@ DataFrame joins:
     comp(u) ← min(comp(u), min_{(u,v)∈E} comp(v))      (neighbor step)
     comp(u) ← min(comp(u), comp(comp(u)))               (doubling step)
 
-Both steps per round; pointer doubling halves label-chain lengths so a
-component of diameter d converges in O(log d) rounds (the 100-node chain
-fixture takes 7). At fixpoint every edge has comp(u) == comp(v) and each
-component is labeled by its MINIMUM member id — deterministic across runs
-and parallelism levels, matching the DuckDB recursive-CTE oracle's
-min(reachable) semantics.
+Both steps per round. After round r every label is at most the minimum id
+within r hops (doubling only lowers it further), so a component of
+diameter d is fully labeled after d rounds and the loop stops one round
+later: it always reaches the fixpoint, with no round cap. Doubling helps
+when ids rise along a path (the id-sorted 100-node chain fixture takes 7
+rounds) and much less when they are shuffled (shuffled chains of 40, 50
+and 100 nodes took 21, 24 and 38 rounds). At fixpoint every edge has
+comp(u) == comp(v) and each component is labeled by its MINIMUM member
+id — deterministic across runs and parallelism levels, matching the
+DuckDB recursive-CTE oracle's min(reachable) semantics.
 
 Scale notes: each round is two equi-joins keyed by node — shuffle
 partitioned on the node key, AQE-coalesced. Lineage is cut every round
-(localCheckpoint; checkpoint() to reliable storage on a cluster) so the
-plan depth stays O(1). Convergence is derived from the doubling join
-ITSELF: each round carries a `changed` flag (new label ≠ round-start
-label) and the LAZY checkpoint is materialized by the changed-row count —
-ONE job per round doing both the barrier and the convergence test (the
-former separate digest job is gone).
+(plans/barrier.py) so the plan depth stays O(1). Convergence is derived
+from the doubling join ITSELF: each round carries a `changed` flag (new
+label ≠ round-start label) and the LAZY barrier is materialized by the
+changed-row count — ONE job per round doing both the barrier and the
+convergence test.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..plans.barrier import barrier
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
@@ -39,15 +44,16 @@ def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iterations: int = 50,
 ) -> DataFrame:
     """edges(src,dst) → (node, component); component = min member id."""
-    e = _symmetrize(
-        edges.select(
-            F.col(src).cast("string").alias("src"),
-            F.col(dst).cast("string").alias("dst"),
+    e = barrier(
+        _symmetrize(
+            edges.select(
+                F.col(src).cast("string").alias("src"),
+                F.col(dst).cast("string").alias("dst"),
+            )
         )
-    ).localCheckpoint()
+    )
 
     # Iterative rounds pay per-task overhead every round; size the working
     # width to the graph, not the session default (a 1k-edge alias graph on
@@ -57,7 +63,7 @@ def connected_components(
     spark = edges.sparkSession
     dp = spark.sparkContext.defaultParallelism
     width = int(max(4, min(dp * 2, n_edges // 50_000 + 4)))
-    # keyed by dst: the checkpoint scan loses partitioning metadata, so
+    # keyed by dst: the barrier scan has no partitioning metadata, so
     # this explicit repartition is re-planned in EVERY round — keying it
     # by the neighbor join's own key lets it double as that join's
     # exchange instead of adding a src-keyed shuffle the join immediately
@@ -73,9 +79,9 @@ def connected_components(
     # lazy: round 1's convergence-count job materializes it (both comp
     # references inside that job share the one RDD), saving the separate
     # eager-materialization job
-    comp = nodes.withColumn("comp", F.col("node")).localCheckpoint(eager=False)
+    comp = barrier(nodes.withColumn("comp", F.col("node")), eager=False)
 
-    for _ in range(max_iterations):
+    while True:
         # neighbor step: min of neighbor labels (round-start label kept as
         # `prev` so the round's change count falls out of the same plan)
         nbr_min = (
@@ -96,7 +102,7 @@ def connected_components(
         )
         # doubling step: follow the label one hop (comp(comp(u)))
         newc = F.least(F.col("a.comp"), F.coalesce(F.col("lcomp"), F.col("a.comp")))
-        doubled = (
+        doubled = barrier(
             stepped.alias("a")
             .join(
                 stepped.select(
@@ -109,14 +115,12 @@ def connected_components(
                 F.col("a.node").alias("node"),
                 newc.alias("comp"),
                 (newc != F.col("a.prev")).alias("changed"),
-            )
-            # LAZY checkpoint: the changed-count action below materializes
-            # it — lineage cut + convergence test in ONE job per round
-            .localCheckpoint(eager=False)
+            ),
+            # lazy: the changed-count action below materializes it —
+            # lineage cut + convergence test in ONE job per round
+            eager=False,
         )
         n_changed = doubled.where(F.col("changed")).count()
         comp = doubled.drop("changed")
         if n_changed == 0:
-            break
-
-    return comp.select("node", F.col("comp").alias("component"))
+            return comp.select("node", F.col("comp").alias("component"))

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import affine_hash_family, md5_long
 from ..functions.vectors import UNROLL_MAX_DIM, cosine, cosine_fixed, norm_fixed
+from ..plans.barrier import barrier
 from ..plans.skew import size_aware_broadcast
 
 MINHASH_K = 16
@@ -82,11 +83,10 @@ def distinct_char_ngrams(text_col: Column, n: int) -> Column:
 
     The native form pays an interpreted transform lambda + substr eval
     PER GRAM (CodegenFallback) — measured 16.4s of the ngram-jaccard
-    sets pass at sf0.1 vs ~3s vectorized. Slicing is by CODE POINTS,
-    which matches the DuckDB oracle's substr semantics exactly (the
-    native Java form counts UTF-16 units instead, diverging from the
-    oracle on non-BMP text — this op is the oracle-true form; identical
-    on all BMP content, pinned by test_distinct_char_ngrams_matches_native).
+    sets pass at sf0.1 vs ~3s vectorized. Slicing is by CODE POINTS, like
+    the native form (Spark's UTF8String length/substr count code points)
+    and the DuckDB oracle's substr, non-BMP text included — pinned by
+    test_distinct_char_ngrams_matches_native.
     First-occurrence dedup (dict.fromkeys) ≡ array_distinct; null text →
     null, len < n → [], like the native when() branches."""
     from pyspark.sql.functions import pandas_udf
@@ -148,9 +148,9 @@ def exact_duplicates(docs: DataFrame, text_col: str = "text", id_col: str = "doc
 
     The (id, h) subtree is referenced twice (group aggregate + join-back
     side) so the scan + md5 run twice — measured r06 A/B at sf0.1 and the
-    10x replica: a localCheckpoint barrier costs MORE than the second
-    cached-parquet scan at both scales (+0.2s fixed job overhead vs a
-    ~free re-scan), so the double-reference stays. The join shape is kept
+    10x replica: a barrier costs MORE than the second cached-parquet scan
+    at both scales (+0.2s fixed job overhead vs a ~free re-scan), so the
+    double-reference stays. The join shape is kept
     over a window-over-h alternative deliberately: a single hot duplicate
     text would land one window task with the whole group, while the join
     is AQE-skew-splittable."""
@@ -192,22 +192,19 @@ def minhash_lsh_pairs(
     (band, band_hash) → distinct candidate pairs → verify true shingle
     Jaccard ≥ 0.7. Output (a, b, jaccard) with a < b.
 
-    Perf (r06): the distinct-shingle-set table is computed ONCE and
-    localCheckpoint'ed — the signature branch and the verify branch both
-    read it. The previous plan evaluated the (interpreted higher-order)
-    shingle transform twice, once per branch — measured ~4.8s per pass of
-    the 15s total at sf1.0. Signatures derived from the checkpointed
-    distinct sets are identical: minhash mins are order-insensitive and
-    the explode input was already array_distinct'ed. On a cluster the
-    checkpoint becomes a real checkpoint to reliable storage (same seam
-    as plans/checkpoint.py).
+    Perf (r06): the distinct-shingle-set table is computed ONCE behind a
+    barrier — the signature branch and the verify branch both read it.
+    The previous plan evaluated the (interpreted higher-order) shingle
+    transform twice, once per branch — measured ~4.8s per pass of the 15s
+    total at sf1.0. Signatures derived from the materialized distinct
+    sets are identical: minhash mins are order-insensitive and the
+    explode input was already array_distinct'ed.
     """
-    sets = (
+    sets = barrier(
         _spread(docs, id_col)
         .select(F.col(id_col).alias("id"), word_tokens(F.col(text_col)).alias("t"))
         .select("id", distinct_shingles3(F.col("t")).alias("g"))
         .withColumn("n", F.size("g"))
-        .localCheckpoint()
     )
     sh = sets.select("id", F.explode("g").alias("s"))
     aggs = [
@@ -326,17 +323,18 @@ def ngram_jaccard_pairs(
     gram sets."""
     # r06: the gram-set table is Arrow-vectorized (distinct_char_ngrams —
     # the interpreted per-gram transform was 16.4s of the sf0.1 pass) and
-    # CHECKPOINTED: it is referenced by the explode AND both verify sides,
-    # which re-ran the gram build 3x (the same fix measured on the
-    # minhash sets table; cluster form = checkpoint to reliable storage)
-    sets = _spread(
-        docs.select(
-            F.col(id_col).alias("id"),
-            F.col(block_col).alias("blk"),
-            distinct_char_ngrams(norm_text(F.col(text_col)), NGRAM_N).alias("g"),
-        ).withColumn("n", F.size("g")),
-        "id",
-    ).localCheckpoint()
+    # behind a barrier: it is referenced by the explode AND both verify
+    # sides, which re-ran the gram build 3x
+    sets = barrier(
+        _spread(
+            docs.select(
+                F.col(id_col).alias("id"),
+                F.col(block_col).alias("blk"),
+                distinct_char_ngrams(norm_text(F.col(text_col)), NGRAM_N).alias("g"),
+            ).withColumn("n", F.size("g")),
+            "id",
+        )
+    )
     g = sets.select("id", "blk", "n", F.explode("g").alias("s"))
     df_ = g.groupBy("blk", "s").agg(F.count("*").alias("gdf"))
     from pyspark.sql import Window
@@ -346,14 +344,14 @@ def ngram_jaccard_pairs(
     # block), but NOT guaranteed small at 100 TB — size_aware_broadcast
     # honors the session autoBroadcastJoinThreshold=-1 escape hatch and
     # lets AQE demote to a shuffle join instead of OOMing the driver.
-    # pre is checkpointed: both sides of the candidate self-join read it,
-    # and its window otherwise re-executes per side (measured 5.2s/pass).
-    pre = (
+    # pre is behind a barrier: both sides of the candidate self-join read
+    # it, and its window otherwise re-executes per side (measured
+    # 5.2s/pass).
+    pre = barrier(
         g.join(size_aware_broadcast(df_, None), ["blk", "s"])
         .withColumn("rk", F.row_number().over(w))
         .where(F.col("rk") <= F.floor(F.col("n") / 5) + 1)
         .select("id", "blk", "s", "n", "rk")
-        .localCheckpoint()
     )
     # ppjoin POSITIONAL filter (exact): rk is the gram's 1-based position
     # in the doc's full (gdf, s)-sorted gram list, so the overlap of any

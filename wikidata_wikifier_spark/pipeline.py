@@ -16,6 +16,7 @@ from .operators import candidates as cand_ops
 from .operators import features, ranker, topk
 from .operators.connected_components import connected_components
 from .operators.mentions import detect_mentions
+from .plans.barrier import barrier
 
 PIPELINE_FEATURES = [
     "monge_elkan",
@@ -62,7 +63,7 @@ def wikify(
     mentions = detect_mentions(source, with_context=False)
     # mentions feed the label-weight aggregate + the final fan-out; the
     # barrier stops the content scan re-running
-    mentions = mentions.localCheckpoint()
+    mentions = barrier(mentions)
     m = mentions.select(
         F.col("mention_id").alias("row"),
         "label_clean",
@@ -122,7 +123,7 @@ def wikify(
         full = features.context_match_array(
             full, out="context_score_arr", keep_micros="_ctx_micros"
         ).drop("context", "n_ctx_props", "n_ctx_matched")
-    full = full.localCheckpoint()  # vocabulary-sized: barrier is ~free
+    full = barrier(full)  # vocabulary-sized: barrier is ~free
     f = features.string_similarity_features(
         full, alias_dim=index.select("qnode", "aliases"), dim_rows=idx_rows
     )
@@ -140,7 +141,7 @@ def wikify(
         # the relevance-rate aggregate and the main table both read f —
         # barrier (vocabulary-scale, ~free) so the string-sim kernel isn't
         # recomputed by the second branch of the fan-out
-        f = f.localCheckpoint()
+        f = barrier(f)
         f = features.context_score_relevant(f, weight_col="w")
         f = f.drop("context_score_arr", "context_arr", "_ctx_micros")
     else:
@@ -150,7 +151,7 @@ def wikify(
             "context_score_3", F.lit(0.0)
         )
     f = features.pgr_rts(f)
-    f = f.localCheckpoint()
+    f = barrier(f)
     f = features.kth_percentile(
         f, score_col="best_str_sim", cell_col="label_clean", weight_col="w"
     )
@@ -187,7 +188,7 @@ def wikify(
     f = features.create_pseudo_gt(
         f, "_pred_micro", "smc_class_score", integral=True, weight_col="w"
     )
-    f = f.localCheckpoint()
+    f = barrier(f)
     f = features.embedding_centroid_score(
         f, emb_dim=index.select("qnode", "embedding"),
         weight_col="w", dim_rows=idx_rows,

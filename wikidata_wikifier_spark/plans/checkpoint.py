@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_long
+from .barrier import barrier
 
 
 def _digest(triples: DataFrame) -> DataFrame:
@@ -134,7 +135,7 @@ def write_triples(
         if n_done:
             todo = triples.join(F.broadcast(done), "part", "left_anti")
 
-    todo = todo.localCheckpoint()  # compute once: data write + manifest
+    todo = barrier(todo)  # compute once: data write + manifest
     n = todo.count()
     written = 0
     if n > 0:

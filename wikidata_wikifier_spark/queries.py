@@ -23,6 +23,7 @@ from .operators.linking_fixture import (
     entity_index,
     property_key_dim,
 )
+from .plans.barrier import barrier
 from .sources.tpch import load_table, table_rows
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -123,9 +124,11 @@ _CANDIDATES_CACHE: dict[tuple[str, str], DataFrame] = {}
 def raw_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _CANDIDATES_CACHE:
-        _CANDIDATES_CACHE[key] = candidates.generate_candidates(
-            cleaned_mentions(spark, sf_dir), entity_index(spark, sf_dir)
-        ).localCheckpoint()
+        _CANDIDATES_CACHE[key] = barrier(
+            candidates.generate_candidates(
+                cleaned_mentions(spark, sf_dir), entity_index(spark, sf_dir)
+            )
+        )
     return _CANDIDATES_CACHE[key]
 
 
@@ -182,11 +185,11 @@ def featured_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).join(m.select("row", "context"), "row")
     # spread before the feature stages: upstream AQE coalesces the capped
     # candidate table to 1-2 partitions, which would serialize them.
-    # localCheckpoint: string_similarity_features reads its input twice
+    # barrier: string_similarity_features reads its input twice
     # (distinct-pair side + join-back side) — without the barrier the whole
     # candidate generation runs 2×.
     n_parts = max(spark.sparkContext.defaultParallelism * 2, 16)
-    full = full.repartition(n_parts, F.col("row")).localCheckpoint()
+    full = barrier(full.repartition(n_parts, F.col("row")))
     f = features.string_similarity_features(
         full, alias_dim=idx.select("qnode", "aliases"), dim_rows=idx_rows
     )
@@ -197,17 +200,15 @@ def featured_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Cut lineage BEFORE kth_percentile: it references its input twice
     # (distribution table + join-back), which without a barrier re-executes
     # the entire candidate generation + string-sim chain 2× (measured ~20s
-    # of the 40s phase at sf0.1). Same role as the reference's per-stage
-    # CSV materialization (wikifier.py:93,210); on a cluster this becomes
-    # checkpoint() to reliable storage.
-    f = f.localCheckpoint()
+    # of the 40s phase at sf0.1).
+    f = barrier(f)
     f = features.kth_percentile(f)
     # Second barrier before the aggregate fan-outs: every tfidf/rates/
     # centroid stage references the table 2-4×, so both runtime and
     # Catalyst analysis (plan tree ~4× per stage) blow up exponentially
     # without it. Cheap: materializes a broadcast join over the first
     # checkpoint's leaf.
-    f = f.localCheckpoint()
+    f = barrier(f)
     # real class_count/property_count MAP features (multi-class entities,
     # property distributions) — replaces the former scalar class + brand
     # proxy (wikifier.py:165-178: --feature-name class_count/property_count)
@@ -222,7 +223,7 @@ def featured_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     # barrier directly after the tf-idf fan-out: create_pseudo_gt and
     # context_match_relevant each read their input twice — without it the
     # smc aggregates re-execute ~4x inside the next checkpoint's plan
-    f = f.localCheckpoint()
+    f = barrier(f)
     f = features.mosaic_features(f)
     # ANSI-oracle proxy anchoring: the reference anchors create-pseudo-gt on
     # the pseudo-GT MLP prediction (wikifier.py:184-186) — pipeline.wikify
@@ -234,13 +235,13 @@ def featured_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
         f, "pgr_rts_micro2", "smc_class_score", "pseudo_gt", integral=True
     )
     f = features.context_match_relevant(f)
-    f = f.localCheckpoint()
+    f = barrier(f)
     f = features.embedding_centroid_score(
         f, emb_dim=idx.select("qnode", "embedding"), dim_rows=idx_rows
     )
     # barrier between the two qnode-keyed fan-outs (centroid reads its
     # input 3x, the pgt tf-idf another 3x — multiplicative without a cut)
-    f = f.localCheckpoint()
+    f = barrier(f)
     f = features.semantic_tfidf_map_multi(
         f,
         [
@@ -250,7 +251,7 @@ def featured_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
         "pseudo_gt",
         dim_rows=idx_rows,
     )
-    f = f.localCheckpoint()
+    f = barrier(f)
     _FEATURED_CACHE[key] = f
     return f
 
@@ -649,7 +650,7 @@ def q_wikify_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-qnode centroid/tf-idf SCORE TABLES are derived from it. The
     # wide 2M-row table is then assembled exactly ONCE (two qnode-keyed
     # broadcast joins + final MLP + handoff write). The previous shape
-    # materialized the wide table twice (two localCheckpoints) and
+    # materialized the wide table twice (two barriers) and
     # re-scanned it per aggregate — the measured bulk of the 13.5s/run
     # sf1.0 tail. Anchored values and join-backs are expression-identical
     # (centroid_scores_table / tfidf_scores_table are the factored-out
@@ -674,11 +675,10 @@ def q_wikify_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     # when the qnode had no anchor rows). The previous shape checkpointed
     # the 2M-row (qnode, pseudo_gt) table and re-aggregated it in each
     # score table.
-    stats = (
+    stats = barrier(
         nf.groupBy("qnode")
         .agg(F.sum("pseudo_gt").alias("_aw"))
         .withColumn("_anchored", (F.col("_aw") > 0).cast("int"))
-        .localCheckpoint()
     )
     # stats is one row per qnode by construction — the score tables' own
     # distinct / per-qnode re-aggregation are identity exchanges on it,

@@ -4,7 +4,7 @@ extension; north_star: the engine ingests repositories as they arrive and
 appends triples incrementally).
 
 Why foreachBatch and not a fully-streaming DAG: the wikification plan
-contains iterative stages (CC), multi-pass aggregates, and localCheckpoint
+contains iterative stages (CC), multi-pass aggregates, and materialization
 barriers that Structured Streaming's incremental planner cannot express.
 foreachBatch hands each micro-batch to the UNCHANGED batch pipeline — one
 code path, identical semantics batch vs stream (the test asserts triple

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .plans.barrier import barrier
+
 NUM_PARTS = 16
 PRED_MENTIONED_IN = "P:mentionedIn"
 PRED_SAME_AS = "P:sameAs"
@@ -43,8 +45,8 @@ def links_to_triples(
         base = base.withColumn("canonical_qnode", F.col("qnode"))
     # three triple families read `base` — without a barrier the whole
     # upstream links DAG (incl. the corpus-scale mention fan-out join)
-    # executes 3×; on a cluster this is checkpoint()/persist(DISK)
-    base = base.localCheckpoint()
+    # executes 3×
+    base = barrier(base)
 
     mentioned = base.select(
         subj.alias("subj"),
