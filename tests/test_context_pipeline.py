@@ -3,7 +3,8 @@ scored against the index's typed property arrays (context_match_array at
 label level) must BREAK LABEL AMBIGUITY — two entities share the label
 "cold widget"; the one whose context_arr names a co-mentioned label wins
 rank 1 even though the plain tie-break (qnode ascending) favors the other.
-Also pins the per-label co-mention aggregation itself.
+Also pins the per-label co-mention aggregation itself, and the identifier
+split that turns code identifiers into labels.
 """
 
 from __future__ import annotations
@@ -84,6 +85,18 @@ def ambiguous(spark):
     )
     index = spark.createDataFrame(_index_rows(), ENTITY_INDEX)
     return source, index
+
+
+def test_identifier_number_is_a_word(spark):
+    # without the letter→digit split the label is "small spring366", which
+    # links to "small spring" instead of "small spring 366"
+    java = "public class Spring {\n  public String getSmallSpring366() { return null; }\n}\n"
+    source = spark.createDataFrame(
+        [{"repo": "r", "path": "Spring.java", "commit": "c", "lang": "java", "content": java}],
+        SOURCE_REPOS,
+    )
+    m = detect_mentions(source, with_context=False)
+    assert [r["label_clean"] for r in m.collect()] == ["small spring 366"]
 
 
 def test_label_context_top_tokens(spark, ambiguous):

@@ -109,15 +109,6 @@ def test_kth_percentile_weighted(spark, tables):
     _assert_same(lab, row, ["kth_percenter"])
 
 
-def test_semantic_tfidf_weighted(spark, tables):
-    label_df, row_df, _, _ = tables
-    lab_c = label_df.withColumn("class", F.substring("qnode", 2, 1))
-    row_c = row_df.withColumn("class", F.substring("qnode", 2, 1))
-    lab = features.semantic_tfidf(lab_c, "class", "anchor", "s", weight_col="w")
-    row = features.semantic_tfidf(row_c, "class", "anchor", "s")
-    _assert_same(lab, row, ["s"])
-
-
 def test_semantic_tfidf_map_weighted(spark, tables):
     label_df, row_df, _, key_dim = tables
     lab = features.semantic_tfidf_map(label_df, key_dim, "anchor", "s", weight_col="w")

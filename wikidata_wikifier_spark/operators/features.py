@@ -348,55 +348,6 @@ def pgr_rts(cands: DataFrame) -> DataFrame:
     )
 
 
-def semantic_tfidf(
-    cands: DataFrame,
-    feature_col: str,
-    anchor_col: str,
-    out: str,
-    weight_col: str | None = None,
-) -> DataFrame:
-    """pgt-semantic-tf-idf / compute-tf-idf (wikifier.py:165-178,196-205):
-    score every candidate by the TF-IDF weight of its class/property
-    against the anchor set's distribution.
-
-    tf(c)  = # anchor candidates with feature value c
-    df(c)  = # distinct qnodes in the full candidate set with value c
-    idf(c) = ln(N / df(c)),  N = # distinct qnodes overall
-    score  = tf(c)*idf(c) / max_c(tf*idf)  ∈ [0,1]
-             (0 when the candidate's value anchors nowhere)
-
-    The max-normalization keeps the feature scale-invariant: raw tf grows
-    with corpus size, which would drown the 0-1 string/context features in
-    the ranker at larger SFs. Two scalar aggregates broadcast back — no
-    candidate-table reshuffle.
-    """
-    n_qnodes = cands.select(F.countDistinct("qnode").alias("n_qnodes"))
-    w_expr = F.col(weight_col) if weight_col else F.lit(1)
-    tf = (
-        cands.where(F.col(anchor_col) == 1)
-        .groupBy(feature_col)
-        .agg(F.sum(w_expr).alias("tf"))
-    )
-    df_ = cands.groupBy(feature_col).agg(F.countDistinct("qnode").alias("df"))
-    raw_w = F.col("tf") * F.log(F.col("n_qnodes") / F.col("df"))
-    max_w = F.max(raw_w).over(Window.partitionBy())
-    weights = (
-        tf.join(df_, feature_col)
-        .crossJoin(F.broadcast(n_qnodes))
-        .select(
-            feature_col,
-            F.when(max_w == 0, F.lit(0.0))
-            .otherwise(F.round(raw_w / max_w, 6))
-            .alias("_tfidf_w"),
-        )
-    )
-    return (
-        cands.join(F.broadcast(weights), feature_col, "left")
-        .withColumn(out, F.coalesce(F.col("_tfidf_w"), F.lit(0.0)))
-        .drop("_tfidf_w")
-    )
-
-
 def semantic_tfidf_map(
     cands: DataFrame,
     key_dim: DataFrame,

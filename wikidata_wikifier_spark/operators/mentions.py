@@ -53,8 +53,11 @@ STOP_LABELS = frozenset(
 
 
 def _split_ident_words(col: Column) -> Column:
-    """snake_case / camelCase / kebab-case → space-separated words."""
+    """snake_case / camelCase / kebab-case → space-separated words; a
+    letter→digit boundary also starts a word (SmallSpring366 → "Small
+    Spring 366", so it cleans to the label "small spring 366")."""
     c = F.regexp_replace(col, r"([a-z0-9])([A-Z])", r"$1 $2")
+    c = F.regexp_replace(c, r"([A-Za-z])([0-9])", r"$1 $2")
     c = F.regexp_replace(c, r"[_\-]+", " ")
     return c
 

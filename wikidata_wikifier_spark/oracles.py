@@ -204,21 +204,6 @@ def _floor05(expr: str) -> str:
     return f"CASE WHEN {expr} >= 0.5 THEN {expr} ELSE 0.0 END"
 
 
-def _tfidf_ctes(prefix: str, src: str, feature: str, anchor: str) -> str:
-    """Mirror of operators/features.py::semantic_tfidf."""
-    return f"""
-{prefix}nq AS MATERIALIZED (SELECT count(DISTINCT qnode) AS n_qnodes FROM {src}),
-{prefix}tf AS MATERIALIZED (SELECT {feature}, count(*) AS tf FROM {src} WHERE {anchor} = 1 GROUP BY {feature}),
-{prefix}df AS MATERIALIZED (SELECT {feature}, count(DISTINCT qnode) AS df FROM {src} GROUP BY {feature}),
-{prefix}w AS MATERIALIZED (
-    SELECT {feature},
-           CASE WHEN max(tf * ln(n_qnodes * 1.0 / df)) OVER () = 0 THEN 0.0
-                ELSE round(tf * ln(n_qnodes * 1.0 / df)
-                           / max(tf * ln(n_qnodes * 1.0 / df)) OVER (), 6) END AS w
-    FROM {prefix}tf JOIN {prefix}df USING ({feature}) CROSS JOIN {prefix}nq)
-"""
-
-
 # class_count / property_count maps of the linking fixture, pre-exploded to
 # (qnode, key, cnt) — mirrors linking_fixture.entity_index's
 # map_from_entries derivations verbatim

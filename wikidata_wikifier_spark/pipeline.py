@@ -18,19 +18,6 @@ from .operators.connected_components import connected_components
 from .operators.mentions import detect_mentions
 from .plans.barrier import barrier
 
-PIPELINE_FEATURES = [
-    "monge_elkan",
-    "monge_elkan_aliases",
-    "jaro_winkler",
-    "levenshtein",
-    "singleton",
-    "context_score_3",
-    "pgt_centroid_score",
-    "pgt_class_count_tf_idf_score",
-    "pgt_property_count_tf_idf_score",
-    "num_occurences",
-]
-
 
 def wikify(
     source: DataFrame,
@@ -205,7 +192,7 @@ def wikify(
     )
     f = ranker.predict_using_model(
         f,
-        PIPELINE_FEATURES,
+        ranker.FINAL_FEATURES,
         ranker.pipeline_ranker_weights(),
         ranker.FINAL_DATA_MIN,
         ranker.FINAL_DATA_MAX,

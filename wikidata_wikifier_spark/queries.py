@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import os
 from collections.abc import Callable
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -68,32 +69,48 @@ def index_rows(spark: SparkSession, sf_dir: str) -> int:
     return _IDX_ROWS_CACHE[key]
 
 
-def q_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return candidates.exact_matches(
-        cleaned_mentions(spark, sf_dir), entity_index(spark, sf_dir),
-        idx_rows=index_rows(spark, sf_dir),
+def _retrieval(
+    spark: SparkSession, sf_dir: str, isa: str | None, *builders
+) -> DataFrame:
+    """Run the label-level strategy builders, cap per (label, method) and
+    fan the result out to the mentions by label_clean."""
+    from .plans.skew import size_aware_broadcast
+
+    m = cleaned_mentions(spark, sf_dir)
+    r = candidates.retrieval_inputs(m, entity_index(spark, sf_dir), isa)
+    capped = candidates.cap_per_label(
+        reduce(DataFrame.unionByName, [build(r) for build in builders])
     )
+    return m.select("row", "label_clean").join(
+        size_aware_broadcast(capped, r.alias_rows), "label_clean"
+    ).select(
+        "row", "label_clean", "qnode", "kg_label", "pagerank", "method",
+        "retrieval_score",
+    )
+
+
+def _trigram(r: candidates.RetrievalInputs) -> DataFrame:
+    return candidates.string_label_matches(r, ("trigram",))
+
+
+def _fuzzy(r: candidates.RetrievalInputs) -> DataFrame:
+    return candidates.string_label_matches(r, ("fuzzy",))
+
+
+def q_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _retrieval(spark, sf_dir, None, candidates.exact_label_matches)
 
 
 def q_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return candidates.ngram_matches(
-        cleaned_mentions(spark, sf_dir), entity_index(spark, sf_dir),
-        idx_rows=index_rows(spark, sf_dir),
-    )
+    return _retrieval(spark, sf_dir, None, candidates.ngram_label_matches)
 
 
 def q_trigram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return candidates.trigram_matches(
-        cleaned_mentions(spark, sf_dir), entity_index(spark, sf_dir),
-        idx_rows=index_rows(spark, sf_dir),
-    )
+    return _retrieval(spark, sf_dir, None, _trigram)
 
 
 def q_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return candidates.fuzzy_matches(
-        cleaned_mentions(spark, sf_dir), entity_index(spark, sf_dir),
-        idx_rows=index_rows(spark, sf_dir),
-    )
+    return _retrieval(spark, sf_dir, None, _fuzzy)
 
 
 # --isa class restriction (wikifier.py:97-113): every OpenRefine reconcile
@@ -105,11 +122,8 @@ ISA_CLASS = "standard"
 def q_retrieval_isa(spark: SparkSession, sf_dir: str) -> DataFrame:
     """--isa restriction across strategies in ONE board entry: exact +
     fuzzy over the class-filtered index, distinguished by `method`."""
-    m = cleaned_mentions(spark, sf_dir)
-    idx = entity_index(spark, sf_dir)
-    n = index_rows(spark, sf_dir)
-    return candidates.exact_matches(m, idx, isa=ISA_CLASS, idx_rows=n).unionByName(
-        candidates.fuzzy_matches(m, idx, isa=ISA_CLASS, idx_rows=n)
+    return _retrieval(
+        spark, sf_dir, ISA_CLASS, candidates.exact_label_matches, _fuzzy
     )
 
 
