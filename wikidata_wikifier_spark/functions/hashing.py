@@ -23,11 +23,6 @@ def md5_long(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def seeded_md5_long(col: Column, seed: int) -> Column:
-    """Independent hash family member: md5 over a seed-prefixed value."""
-    return md5_long(F.concat(F.lit(f"s{seed}:"), col))
-
-
 AFFINE_MOD = 2147483647  # 2^31 - 1 (Mersenne prime)
 
 

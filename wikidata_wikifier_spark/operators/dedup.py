@@ -171,18 +171,6 @@ def exact_duplicates(docs: DataFrame, text_col: str = "text", id_col: str = "doc
 
 # --------------------------------------------------------------- minhash
 
-def minhash_signatures(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = MINHASH_K
-) -> DataFrame:
-    """K-wide MinHash signature per doc: explode shingles once, take K
-    seeded min-hashes in one aggregate (K columns, map-side combined)."""
-    sh = _spread(docs, id_col).select(
-        id_col, F.explode(F.array_distinct(word_shingles(F.col(text_col)))).alias("s")
-    )
-    aggs = [F.min(affine_hash_family(F.col("s"), i)).alias(f"h{i}") for i in range(k)]
-    return sh.groupBy(id_col).agg(*aggs)
-
-
 def minhash_lsh_pairs(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:

@@ -1,9 +1,12 @@
-"""Feature computation over the candidate table (SURVEY.md §2.4).
+"""Feature operators over the candidate table (SURVEY.md §2.4).
 
-Mirrors the reference's second `tl` chain (wikifier/wikifier.py:148-210):
-string similarities, singleton, high-confidence pick, context match,
-kth-percentile anchoring, semantic TF-IDF (class/property), pgr_rts,
-mosaic features, embedding centroid scoring.
+The reference computes its features in one `tl` chain
+(wikifier/wikifier.py:148-210): string similarities, singleton,
+high-confidence pick, context match with its relevant-properties second
+pass, pgr_rts, kth-percentile anchoring, semantic TF-IDF (class/property),
+pseudo-GT, embedding centroid scoring. pipeline.feature_chain composes these
+operators in that order, once, for both the shipping label-level pipeline
+and the row-level oracle board.
 
 Execution notes for scale:
 - Everything except monge-elkan/jaro-winkler is a NATIVE column
@@ -15,6 +18,9 @@ Execution notes for scale:
   frequencies) broadcast-joined back to the candidate table: at 100 TB the
   aggregates are KBs (one row per class), the candidate table never
   re-shuffles.
+- weight_col (label-level mode): each row stands for `weight` mentions,
+  so every count becomes an exact integer sum of weights and the result
+  equals the row-level one (tests/test_label_level.py).
 """
 
 from __future__ import annotations
@@ -45,7 +51,7 @@ def _floor_sim(col: Column) -> Column:
 
 def string_similarity_features(
     cands: DataFrame,
-    alias_dim: DataFrame | None = None,
+    alias_dim: DataFrame,
     dim_rows: int | None = None,
 ) -> DataFrame:
     """monge_elkan / monge_elkan_aliases / jaro_winkler / levenshtein
@@ -60,22 +66,15 @@ def string_similarity_features(
     corpus scale. levenshtein stays a native JVM expression on the main
     table (whole-stage codegen, free).
 
-    alias_dim: optional (qnode, aliases) dimension; when given, the
-    aliases array never has to be carried on the candidate table at all.
+    alias_dim: the (qnode, aliases) dimension, so the aliases array is
+    never carried on the candidate table.
     """
     key = ["label_clean", "qnode"]
-    if alias_dim is not None:
-        pairs = (
-            cands.select("label_clean", "qnode", "kg_label")
-            .distinct()
-            .join(size_aware_broadcast(alias_dim, dim_rows), "qnode")
-        )
-    else:
-        pairs = cands.groupBy(*key).agg(
-            F.first("kg_label").alias("kg_label"),
-            F.first("aliases").alias("aliases"),
-        )
-    pairs = pairs.select(
+    pairs = (
+        cands.select("label_clean", "qnode", "kg_label")
+        .distinct()
+        .join(size_aware_broadcast(alias_dim, dim_rows), "qnode")
+    ).select(
         *key,
         _floor_sim(
             F.round(symmetric_monge_elkan_udf(F.col("label_clean"), F.col("kg_label")), 6)
@@ -114,47 +113,6 @@ def pick_hc_candidates(cands: DataFrame) -> DataFrame:
     return cands.withColumn("best_str_sim", F.round(best, 6)).withColumn(
         "ignore_candidate", (best < HC_SIM_MIN).cast("int")
     )
-
-
-def context_match(cands: DataFrame) -> DataFrame:
-    """context-match (wikifier.py:159-162): compare the mention's row
-    context against the candidate's property values. String properties
-    match at levenshtein-sim ≥ 0.85; quantities at relative closeness
-    ≥ 0.9. context_score = matched properties / compared properties.
-
-    Expects: context ('brandstr|classstr|sizestr') + candidate columns
-    brand, class, size. Pure native expressions.
-    """
-    ctx = F.split(F.col("context"), r"\|")
-    ctx_brand = F.lower(ctx.getItem(0))
-    ctx_class = ctx.getItem(1)
-    ctx_size = ctx.getItem(2).cast("double")
-
-    brand_sim = levenshtein_similarity(ctx_brand, F.lower(F.col("brand")))
-    class_sim = levenshtein_similarity(ctx_class, F.col("class"))
-    size_close = F.when(
-        F.greatest(ctx_size, F.col("size").cast("double")) == 0, F.lit(1.0)
-    ).otherwise(
-        F.least(ctx_size, F.col("size").cast("double"))
-        / F.greatest(ctx_size, F.col("size").cast("double"))
-    )
-
-    out = (
-        cands.withColumn(
-            "brand_match", (brand_sim >= CONTEXT_STRING_SIM_MIN).cast("int")
-        )
-        .withColumn("class_match", (class_sim >= CONTEXT_STRING_SIM_MIN).cast("int"))
-        .withColumn("size_match", (size_close >= CONTEXT_QUANTITY_MIN).cast("int"))
-        # similarity-valued scores (not just flags): above the threshold the
-        # actual similarity is kept, so near-misses ("Brand#10" vs
-        # "Brand#15", sim 0.875) rank below exact property matches instead
-        # of tying them
-        .withColumn("brand_score", F.col("brand_match") * brand_sim)
-        .withColumn("class_score", F.col("class_match") * class_sim)
-        .withColumn("size_score", F.col("size_match") * size_close)
-    )
-    score = (F.col("brand_score") + F.col("class_score") + F.col("size_score")) / 3.0
-    return out.withColumn("context_score", F.round(score, 6))
 
 
 def context_match_typed(
@@ -207,56 +165,6 @@ def context_match_typed(
     for s in score_cols[1:]:
         total = total + s
     return out_df.withColumn(out, F.round(total / len(properties), 6))
-
-
-RELEVANT_PROPERTY_MIN_RATE = 0.5  # --save-relevant-properties anchor share [ext]
-
-
-def context_match_relevant(
-    cands: DataFrame, column_col: str | None = None
-) -> DataFrame:
-    """Second context-match pass (wikifier.py:187-189,
-    --use-relevant-properties): a property is "relevant" if it matched for
-    ≥ 50% of the kth-percentile anchor candidates; context_score_3 is the
-    match fraction over relevant properties only (0 when none relevant).
-
-    The reference saves relevant properties PER INPUT COLUMN
-    (ctx_props.csv keyed by column); pass column_col to group the
-    relevance rates accordingly — None collapses to one global rate row
-    (identical for single-column inputs). Either way the stats are a tiny
-    aggregate broadcast back."""
-    group = [column_col] if column_col else []
-    rates = cands.where(F.col("kth_percenter") == 1).groupBy(*group).agg(
-        F.coalesce(
-            (F.avg("brand_match") >= RELEVANT_PROPERTY_MIN_RATE).cast("int"), F.lit(0)
-        ).alias("rel_brand"),
-        F.coalesce(
-            (F.avg("class_match") >= RELEVANT_PROPERTY_MIN_RATE).cast("int"), F.lit(0)
-        ).alias("rel_class"),
-        F.coalesce(
-            (F.avg("size_match") >= RELEVANT_PROPERTY_MIN_RATE).cast("int"), F.lit(0)
-        ).alias("rel_size"),
-    )
-    # left join: a column with zero anchors has no rates row — its
-    # properties are all irrelevant (score 0), not dropped
-    rb = F.coalesce(F.col("rel_brand"), F.lit(0))
-    rc = F.coalesce(F.col("rel_class"), F.lit(0))
-    rs = F.coalesce(F.col("rel_size"), F.lit(0))
-    n_rel = rb + rc + rs
-    score = (
-        F.col("brand_score") * rb
-        + F.col("class_score") * rc
-        + F.col("size_score") * rs
-    )
-    joined = (
-        cands.join(F.broadcast(rates), group, "left")
-        if group
-        else cands.crossJoin(F.broadcast(rates))
-    )
-    return joined.withColumn(
-        "context_score_3",
-        F.when(n_rel == 0, F.lit(0.0)).otherwise(F.round(score / n_rel, 6)),
-    ).drop("rel_brand", "rel_class", "rel_size")
 
 
 def kth_percentile(
@@ -348,47 +256,6 @@ def pgr_rts(cands: DataFrame) -> DataFrame:
     )
 
 
-def semantic_tfidf_map(
-    cands: DataFrame,
-    key_dim: DataFrame,
-    anchor_col: str,
-    out: str,
-    weight_col: str | None = None,
-    dim_rows: int | None = None,
-) -> DataFrame:
-    """pgt-semantic-tf-idf / compute-tf-idf over a COUNT-MAP feature
-    (wikifier.py:165-178,196-205 with --feature-name class_count /
-    property_count): the reference's aux fields are maps of class/property
-    → count per qnode, so a candidate carries a SET of feature keys and
-    its score sums the tf-idf weight of every key it has.
-
-    key_dim: (qnode, key) exploded map rows — distinct per (qnode, key).
-
-    tf(k)  = Σ weight over anchor candidates whose qnode carries k
-    df(k)  = # distinct candidate qnodes carrying k
-    idf(k) = ln(N / df(k)),   N = # distinct candidate qnodes
-    s(q)   = Σ_{k ∈ keys(q)} tf(k)·idf(k)
-    score  = s(q) / max_q s(q)  ∈ [0,1]   (0 when nothing anchors)
-
-    Engine-parity note: per-key weights are snapped to exact integer
-    micros (floor(tf·idf·1e6 + 0.5)) BEFORE the per-qnode sum, so the sum
-    is order-free integer arithmetic and the final score is one IEEE
-    division of exactly-representable integers — bit-stable across Spark,
-    DuckDB, and partition orders (the float-sum order would otherwise
-    differ in the last ulp between engines). Map-count semantics: tf-idf
-    uses key PRESENCE; the counts order classes for reconcile typing
-    (reconcile_response), mirroring how the reference uses top5_class_count
-    for its type payload (wikifier_service.py:116-142).
-
-    Plan shape at 100 TB: every aggregate is key- or vocabulary-scale
-    (distinct qnodes × map keys), broadcast back — the candidate table
-    never reshuffles.
-    """
-    return semantic_tfidf_map_multi(
-        cands, [(key_dim, out)], anchor_col, weight_col=weight_col, dim_rows=dim_rows
-    )
-
-
 def semantic_tfidf_map_multi(
     cands: DataFrame,
     dims: list[tuple[DataFrame, str]],
@@ -396,56 +263,51 @@ def semantic_tfidf_map_multi(
     weight_col: str | None = None,
     dim_rows: int | None = None,
 ) -> DataFrame:
-    """semantic_tfidf_map for SEVERAL key dimensions sharing one anchor
-    column (the reference always computes the class_count and
-    property_count features back-to-back against the same anchor set,
-    wikifier.py:165-178,196-205): the dims are tagged and unioned so the
+    """pgt-semantic-tf-idf / compute-tf-idf over COUNT-MAP features
+    (wikifier.py:165-178,196-205 with --feature-name class_count /
+    property_count): the reference's aux fields are maps of class/property
+    → count per qnode, so a candidate carries a SET of feature keys and
+    its score sums the tf-idf weight of every key it has.
+
+    dims: list of (key_dim(qnode, key), out_col); each key_dim is distinct
+    per (qnode, key). Per family:
+
+    tf(k)  = Σ weight over anchor candidates whose qnode carries k
+    df(k)  = # distinct candidate qnodes carrying k
+    idf(k) = ln(N / df(k)),   N = # distinct candidate qnodes
+    s(q)   = Σ_{k ∈ keys(q)} tf(k)·idf(k)
+    score  = s(q) / max_q s(q)  ∈ [0,1]   (0 when nothing anchors)
+
+    The reference computes the class and property families back-to-back
+    against the same anchor set, so the dims are tagged and unioned: the
     distinct-qnode scan, the anchor mass aggregate, every per-key
-    aggregate, and the final broadcast join-back run ONCE for all
-    families instead of once per family — per-family math is grouped by
-    the family tag and therefore identical to independent calls (the
-    per-family oracles pin this).
+    aggregate and the broadcast join-back run ONCE for all families. The
+    per-family math is grouped by the family tag, so it equals independent
+    calls (the per-family oracles pin this).
 
-    dims: list of (key_dim(qnode, key), out_col).
+    Engine-parity note: per-key weights are snapped to exact integer
+    micros (floor(tf·idf·1e6 + 0.5)) BEFORE the per-qnode sum, so the sum
+    is order-free integer arithmetic and the final score is one IEEE
+    division of exactly-representable integers — bit-stable across Spark,
+    DuckDB, and partition orders. Map-count semantics: tf-idf uses key
+    PRESENCE; the counts order classes for reconcile typing
+    (reconcile_response), mirroring how the reference uses
+    top5_class_count for its type payload (wikifier_service.py:116-142).
+
+    Plan shape at 100 TB: every aggregate is key- or vocabulary-scale
+    (distinct qnodes × map keys), broadcast back — the candidate table
+    never reshuffles.
     """
-    scores = tfidf_scores_table(
-        cands, dims, anchor_col, weight_col=weight_col, dim_rows=dim_rows
-    )
-    joined = cands.join(size_aware_broadcast(scores, dim_rows), "qnode", "left")
-    return joined.na.fill({out: 0.0 for _kd, out in dims})
-
-
-def tfidf_scores_table(
-    cands: DataFrame,
-    dims: list[tuple[DataFrame, str]],
-    anchor_col: str,
-    weight_col: str | None = None,
-    dim_rows: int | None = None,
-    pre_aggregated: bool = False,
-) -> DataFrame:
-    """The per-qnode (qnode, out...) score table of
-    semantic_tfidf_map_multi WITHOUT the join-back — needs only (qnode,
-    anchor_col [, weight]) from cands, so callers holding the wide table
-    can feed a narrow projection (see centroid_scores_table).
-
-    pre_aggregated=True: cands has exactly one row per qnode — the
-    distinct and the per-qnode weight re-aggregation become projections,
-    and df(k) = countDistinct(qnode) = count(*) since (fam, qnode, key)
-    rows are unique (key_dim is distinct per (qnode, key)); count skips
-    countDistinct's two-phase dedup exchange."""
     tagged = None
     for i, (kd, _out) in enumerate(dims):
         t = kd.select(F.lit(i).alias("fam"), "qnode", "key")
         tagged = t if tagged is None else tagged.unionByName(t)
     w_expr = F.col(weight_col) if weight_col else F.lit(1)
-    qn = cands.select("qnode") if pre_aggregated else cands.select("qnode").distinct()
+    qn = cands.select("qnode").distinct()
     ck = qn.join(size_aware_broadcast(tagged, dim_rows), "qnode")
     n_q = qn.agg(F.count("*").alias("n_qnodes"))
-    df_agg = F.count("*") if pre_aggregated else F.countDistinct("qnode")
     aw = (
-        cands.where(F.col(anchor_col) == 1).select("qnode", w_expr.alias("_aw"))
-        if pre_aggregated
-        else cands.where(F.col(anchor_col) == 1)
+        cands.where(F.col(anchor_col) == 1)
         .groupBy("qnode")
         .agg(F.sum(w_expr).alias("_aw"))
     )
@@ -458,7 +320,7 @@ def tfidf_scores_table(
     kstats = (
         ck.join(size_aware_broadcast(aw, dim_rows), "qnode", "left")
         .groupBy("fam", "key")
-        .agg(df_agg.alias("df"), F.sum("_aw").alias("tf"))
+        .agg(F.countDistinct("qnode").alias("df"), F.sum("_aw").alias("tf"))
     )
     micro = (
         kstats.crossJoin(F.broadcast(n_q))
@@ -496,7 +358,9 @@ def tfidf_scores_table(
             .otherwise(F.round(s_i / m_i, 6))
             .alias(out)
         )
-    return per_q.crossJoin(F.broadcast(maxs)).select("qnode", *out_cols)
+    scores = per_q.crossJoin(F.broadcast(maxs)).select("qnode", *out_cols)
+    joined = cands.join(size_aware_broadcast(scores, dim_rows), "qnode", "left")
+    return joined.na.fill({out: 0.0 for _kd, out in dims})
 
 
 _NUM_RE = r"^-?[0-9]+(\.[0-9]+)?$"
@@ -525,7 +389,7 @@ def context_match_array(
     comparison is higher-order array expressions (transform/array_max/
     aggregate) — zero explodes, zero shuffles, whole-stage codegen.
     Per-property scores are snapped to integer micros before the mean so
-    the fold is order-free and engine-exact (see semantic_tfidf_map).
+    the fold is order-free and engine-exact (see semantic_tfidf_map_multi).
     Casts are regex-guarded: ANSI mode is on, and a context token like
     'economy' must score 0 against a quantity property, not throw.
 
@@ -632,11 +496,10 @@ def context_score_relevant(
     """context-match --use-relevant-properties (wikifier.py:187-189): the
     second context pass restricted to the RELEVANT properties — those that
     matched for at least half of the high-confidence candidates in pass 1
-    (--save-relevant-properties writes exactly these stats; the tabular
-    twin is the rel_brand/rel_class/rel_size rate block in the
-    features_context_match oracle, f10).
+    (--save-relevant-properties writes exactly these stats; the SQL twin
+    is the rel/ctx3 block of oracles.FEATURE_CTES).
 
-    Works at LABEL level: pass-1 per-entry scores (micros_col, from
+    Works at row or LABEL level: pass-1 per-entry scores (micros_col, from
     context_match_array(keep_micros=...)) are exploded per property for
     the HC rows only (hc_col == 0 — ignore_candidate semantics), rates are
     exact-integer weighted by the label's mention multiplicity
@@ -644,8 +507,7 @@ def context_score_relevant(
     relevant-property set — property-vocabulary-sized, i.e. tiny — is
     broadcast back as ONE array. The restricted score is then a pure array
     fold per row: mean of pass-1 entry micros over the candidate's
-    relevant-property entries, 0 when it has none (mirrors the tabular
-    0-when-no-relevant rule)."""
+    relevant-property entries, 0 when it has none."""
     ctx_arr = F.coalesce(
         F.col(context_arr_col),
         F.array().cast("array<struct<property:string,value:string,vtype:string>>"),
@@ -691,16 +553,9 @@ def context_score_relevant(
     )
 
 
-def mosaic_features(cands: DataFrame, col: str = "kg_label") -> DataFrame:
-    """mosaic-features --num-char --num-tokens (wikifier.py:190)."""
-    return cands.withColumn("num_char", F.length(col)).withColumn(
-        "num_tokens", F.size(F.split(F.col(col), r"\s+"))
-    )
-
-
 def embedding_centroid_score(
     cands: DataFrame,
-    emb_dim: DataFrame | None = None,
+    emb_dim: DataFrame,
     anchor_col: str = "pseudo_gt",
     emb_col: str = "embedding",
     out: str = "pgt_centroid_score",
@@ -712,60 +567,21 @@ def embedding_centroid_score(
     embeddings, then cosine(candidate, centroid).
 
     cosine(candidate, centroid) depends ONLY on the qnode, so the explode/
-    dot-product runs over the DISTINCT-qnode table (entity-count rows, not
-    candidate-count — the former full-table posexplode was candidates×dim
-    rows, the current one is |entities|×dim). The anchor centroid keeps
-    row multiplicity via per-qnode anchor counts (one tiny partial-agg
-    shuffle). Centroid components are rounded to 6 decimals before the
-    cosine so the score is reproducible across engines and partition
-    orders. See embedding_centroid_lof_score for the LOF-outlier-dropping
-    variant.
+    dot-product runs over the DISTINCT-qnode table (|entities|×dim rows,
+    not candidates×dim). The anchor centroid keeps row multiplicity via
+    per-qnode anchor counts (one tiny partial-agg shuffle). Centroid
+    components are rounded to 6 decimals before the cosine so the score is
+    reproducible across engines and partition orders. See
+    embedding_centroid_lof_score for the LOF-outlier-dropping variant.
 
-    emb_dim: optional (qnode, embedding) dimension; when given, the
-    embedding array never has to be carried on the candidate table."""
-    if emb_dim is None:
-        emb_dim = cands.groupBy("qnode").agg(F.first(emb_col).alias(emb_col))
-    scores = centroid_scores_table(
-        cands, emb_dim, anchor_col=anchor_col, emb_col=emb_col, out=out,
-        weight_col=weight_col, dim_rows=dim_rows,
-    )
-    return cands.join(size_aware_broadcast(scores, dim_rows), "qnode", "left").na.fill(
-        {out: 0.0}
-    )
-
-
-def centroid_scores_table(
-    cands: DataFrame,
-    emb_dim: DataFrame,
-    anchor_col: str = "pseudo_gt",
-    emb_col: str = "embedding",
-    out: str = "pgt_centroid_score",
-    weight_col: str | None = None,
-    dim_rows: int | None = None,
-    pre_aggregated: bool = False,
-) -> DataFrame:
-    """The (qnode, out) score table of embedding_centroid_score WITHOUT
-    the join-back — every aggregate here needs only (qnode, anchor_col
-    [, weight]), so callers that already hold the wide candidate table
-    can feed a NARROW projection and join the tiny result back once
-    (wikify_end_to_end's per-run tail re-derives pseudo-GT-anchored
-    scores; scanning the 2M-row wide table per aggregate was the
-    measured cost — guide §2.3 project early).
-
-    pre_aggregated=True declares cands already has EXACTLY ONE row per
-    qnode (e.g. wikify's checkpointed per-qnode stats table): the
-    per-qnode weight re-aggregation and the distinct collapse to plain
-    projections — groupBy of a unique key and distinct of a unique
-    column are identity aggregates, but each still costs an exchange
-    (guide §2.4 'a distinct on data that is already unique')."""
+    emb_dim: the (qnode, embedding) dimension, so the embedding array is
+    never carried on the candidate table."""
     w_expr = F.col(weight_col) if weight_col else F.lit(1)
-    anchored = cands.where(F.col(anchor_col) == 1)
-    if pre_aggregated:
-        anchor_counts = anchored.select("qnode", w_expr.alias("w"))
-        qn = cands.select("qnode")
-    else:
-        anchor_counts = anchored.groupBy("qnode").agg(F.sum(w_expr).alias("w"))
-        qn = cands.select("qnode").distinct()
+    anchor_counts = (
+        cands.where(F.col(anchor_col) == 1)
+        .groupBy("qnode")
+        .agg(F.sum(w_expr).alias("w"))
+    )
     a_emb = anchor_counts.join(size_aware_broadcast(emb_dim, dim_rows), "qnode")
     centroid = (
         a_emb.select("w", F.posexplode(emb_col).alias("i", "v"))
@@ -775,10 +591,12 @@ def centroid_scores_table(
         )
     )
     qn = (
-        qn.join(size_aware_broadcast(emb_dim, dim_rows), "qnode")
+        cands.select("qnode")
+        .distinct()
+        .join(size_aware_broadcast(emb_dim, dim_rows), "qnode")
         .select("qnode", F.posexplode(emb_col).alias("i", "v"))
     )
-    return (
+    scores = (
         qn.join(F.broadcast(centroid), "i")
         .groupBy("qnode")
         .agg(
@@ -793,6 +611,9 @@ def centroid_scores_table(
             ),
         )
         .select("qnode", out)
+    )
+    return cands.join(size_aware_broadcast(scores, dim_rows), "qnode", "left").na.fill(
+        {out: 0.0}
     )
 
 
@@ -971,7 +792,6 @@ def create_pseudo_gt(
     prediction_col: str,
     filter_col: str = "smc_class_score",
     out: str = "pseudo_gt",
-    integral: bool = False,
     column_col: str | None = None,
     weight_col: str | None = None,
 ) -> DataFrame:
@@ -986,51 +806,30 @@ def create_pseudo_gt(
     avg().over(Window.partitionBy()), which funnels the whole table
     through a single task.
 
-    With integral=True the prediction column must be an exact integer
-    (e.g. pgr_rts_micro2) and the mean comparison is done as
-    x * n >= sum(x) in decimal(38,0) arithmetic — no floating-point
-    summation order anywhere, so the boolean is bit-stable across engines
-    and partition orders (a float avg() differs in the last ulp between
-    Spark and any oracle engine when the sum order differs, flipping rows
-    that tie with the mean)."""
+    The prediction column must be an exact integer (e.g. a 6-dp score in
+    integer micros) and the mean comparison is done as x * n >= sum(x) in
+    decimal(38,0) arithmetic — no floating-point summation order anywhere,
+    so the boolean is bit-stable across engines and partition orders (a
+    float avg() differs in the last ulp between Spark and any oracle
+    engine when the sum order differs, flipping rows that tie with the
+    mean)."""
     group = [column_col] if column_col else []
-
-    def attach(stats: DataFrame) -> DataFrame:
-        if group:
-            return cands.join(F.broadcast(stats), group)
-        return cands.crossJoin(F.broadcast(stats))
-
     w_expr = (
         F.col(weight_col).cast("decimal(38,0)") if weight_col
         else F.lit(1).cast("decimal(38,0)")
     )
-    if integral:
-        stats = cands.groupBy(*group).agg(
-            F.sum(F.col(prediction_col).cast("decimal(38,0)") * w_expr).alias("_pgt_tot"),
-            F.sum(w_expr).alias("_pgt_n"),
-        )
-        cond = (
-            F.col(prediction_col).cast("decimal(38,0)") * F.col("_pgt_n")
-            >= F.col("_pgt_tot")
-        )
-        return (
-            attach(stats)
-            .withColumn(
-                out,
-                F.when(cond & (F.col(filter_col) > 0), 1).otherwise(0),
-            )
-            .drop("_pgt_tot", "_pgt_n")
-        )
-    stats = cands.groupBy(*group).agg(F.avg(prediction_col).alias("_pgt_mean"))
-    return (
-        attach(stats)
-        .withColumn(
-            out,
-            F.when(
-                (F.col(prediction_col) >= F.col("_pgt_mean"))
-                & (F.col(filter_col) > 0),
-                1,
-            ).otherwise(0),
-        )
-        .drop("_pgt_mean")
+    stats = cands.groupBy(*group).agg(
+        F.sum(F.col(prediction_col).cast("decimal(38,0)") * w_expr).alias("_pgt_tot"),
+        F.sum(w_expr).alias("_pgt_n"),
     )
+    joined = (
+        cands.join(F.broadcast(stats), group) if group
+        else cands.crossJoin(F.broadcast(stats))
+    )
+    cond = (
+        F.col(prediction_col).cast("decimal(38,0)") * F.col("_pgt_n")
+        >= F.col("_pgt_tot")
+    )
+    return joined.withColumn(
+        out, F.when(cond & (F.col(filter_col) > 0), 1).otherwise(0)
+    ).drop("_pgt_tot", "_pgt_n")

@@ -6,11 +6,12 @@ driver-checked queries derive both sides deterministically from `part`:
 
 - entity_index: one row per part — qnode 'Q'||p_partkey, label = cleaned
   p_name, aliases = [label, brand-qualified label, p_type-qualified label],
-  pagerank ∝ p_retailprice, class = p_type, properties from p_brand/p_size.
+  pagerank ∝ p_retailprice, class = p_type, typed context entries from
+  p_brand/p_size and a derived date.
 - mentions: every 5th part, with a deterministic perturbation by partkey
   mod 3: exact copy / trailing-char dropped (typo → fuzzy path) /
-  uppercased (case → clean path). context carries brand|type|size for
-  context-match.
+  uppercased (case → clean path). context carries brand|type|size, the
+  tokens context-match compares against the entity's context entries.
 
 Every derivation here is mirrored verbatim in the DuckDB oracle CTEs
 (oracles.py — the single SQL source of truth) so the driver's value-hash
@@ -109,8 +110,6 @@ def entity_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("a "), F.lower("p_type"), F.lit(" of brand "), F.col("p_brand")
         ).alias("description"),
         F.lower("p_type").alias("class"),
-        F.col("p_brand").alias("brand"),
-        F.col("p_size").alias("size"),
         embedding.alias("embedding"),
         F.map_from_entries(class_entries).alias("class_count"),
         F.map_from_entries(prop_entries).alias("property_count"),
@@ -144,14 +143,6 @@ def class_label_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "type_name"
             ),
         )
-    )
-
-
-def property_key_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(qnode, key, cnt) exploded view of the property_count map."""
-    idx = entity_index(spark, sf_dir)
-    return idx.select(
-        "qnode", F.explode("property_count").alias("key", "cnt")
     )
 
 

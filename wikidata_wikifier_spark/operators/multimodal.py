@@ -98,15 +98,3 @@ def decode_batch(media: DataFrame, id_col: str = "doc_id", use_stub: bool = True
             )
 
     return media.mapInPandas(run, DECODED_SCHEMA)
-
-
-def frame_sample(media: DataFrame, every_n_bytes: int = 64, id_col: str = "doc_id") -> DataFrame:
-    """'Frame sampling' over the opaque payload: one row per sampled
-    offset — native (sequence+explode), demonstrating bounded fan-out of
-    a video-frame-extraction stage without a codec."""
-    n = F.col("meta.n_bytes")
-    offsets = F.sequence(F.lit(0), F.greatest((n - 1) / every_n_bytes, F.lit(0)).cast("int"))
-    return media.select(
-        id_col,
-        F.explode(offsets).alias("frame_idx"),
-    ).withColumn("byte_offset", F.col("frame_idx") * every_n_bytes)

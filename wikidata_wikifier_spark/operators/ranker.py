@@ -195,10 +195,11 @@ def predict_using_model(
     form). When the weight dict matches that structure bit-for-bit, the
     score is emitted as a NATIVE codegen'd column expression with the
     same left-to-right term association as the oracle SQL: no Arrow
-    exchange, and the surrounding stage stays one codegen span. Rounded
-    outputs verified row-identical to the UDF path at sf0.001/0.01/0.1
-    (BENCH/ab_mlp_native.py). Arbitrary weights (e.g. the random-weight
-    pytest) keep the vectorized UDF path."""
+    exchange, and the surrounding stage stays one codegen span. Its
+    round(·, 6) output equals the UDF path's for every production
+    calibration (tests/test_ranker.py::
+    test_calibrated_native_path_equals_udf_path). Arbitrary weights (e.g.
+    the random-weight pytest) keep the vectorized UDF path."""
     calib = _calibrated_params(weights)
     if calib is not None and len(features) == len(calib[0]):
         fw, gain, bias = calib

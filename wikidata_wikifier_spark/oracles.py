@@ -1,9 +1,11 @@
 """DuckDB oracle SQL for every driver-checked query in queries.py.
 
-Parquet handoff: features_pseudo_gt_mlp_anchor / wikify_end_to_end /
-features_centroid_lof read the stage output the Spark query materialized
-under ORACLE_CACHE (keyed by the part+lineitem row-count fingerprint —
-see queries._handoff), so a non-SQL-expressible stage (MLP, LOF) feeds an
+FEATURE_CTES mirrors pipeline.feature_chain run row-level, step by step.
+
+Parquet handoff: wikify_end_to_end / features_centroid_lof read the stage
+output the Spark query materialized under ORACLE_CACHE (keyed by the
+part+lineitem row-count fingerprint — see queries._handoff), so a
+non-SQL-expressible stage (LOF) or a long score chain feeds an
 exactly-checked SQL tail.
 
 Shared CTE fragments mirror operators/linking_fixture.py and the
@@ -32,8 +34,6 @@ WITH entity_index AS (
            round(p_retailprice / 1000.0, 6)                 AS pagerank,
            'a ' || lower(p_type) || ' of brand ' || p_brand AS description,
            lower(p_type)                                    AS class,
-           p_brand                                          AS brand,
-           p_size                                           AS size,
            [CAST((p_partkey * (d + 13)) % 97 AS DOUBLE) / 97.0
             for d in generate_series(0, 7)]                 AS embedding
     FROM part {isa_where}
@@ -290,145 +290,6 @@ def _tfidf_map_ctes(prefix: str, src: str, keys: str, anchor: str) -> str:
 """
 
 
-FEATURE_CTES = (
-    LINKING_CTES
-    + f""",
-cand AS MATERIALIZED (
-    SELECT row, label_clean, qnode,
-           min(kg_label)                  AS kg_label,
-           round(max(pagerank), 6)        AS pagerank,
-           round(max(retrieval_score), 6) AS retrieval_score,
-           count(DISTINCT method)         AS num_occurences
-    FROM all_candidates GROUP BY 1, 2, 3
-),
-fullc AS MATERIALIZED (
-    SELECT c.row, c.label_clean, c.qnode, c.kg_label, c.pagerank,
-           c.retrieval_score, c.num_occurences,
-           e.aliases, e.class, e.brand, e.size, e.embedding, m.context
-    FROM cand c
-    JOIN entity_index e ON c.qnode = e.qnode
-    JOIN mentions m ON c.row = m.row
-),
-sf AS MATERIALIZED (
-    SELECT *,
-           {_floor05(f'round({_sym_me("label_clean", "kg_label")}, 6)')} AS monge_elkan,
-           {_floor05(f'round(list_max([{_sym_me("label_clean", "al")} for al in aliases]), 6)')}
-                                                          AS monge_elkan_aliases,
-           {_floor05('round(jaro_winkler_similarity(label_clean, kg_label), 6)')} AS jaro_winkler,
-           {_floor05(f'round({_lev_sim("label_clean", "kg_label")}, 6)')} AS levenshtein
-    FROM fullc
-),
-f1 AS MATERIALIZED (
-    SELECT *, CASE WHEN count(*) OVER (PARTITION BY row) = 1 THEN 1 ELSE 0 END AS singleton
-    FROM sf
-),
-f2 AS MATERIALIZED (
-    SELECT *,
-           round(greatest(monge_elkan, monge_elkan_aliases, jaro_winkler, levenshtein), 6)
-               AS best_str_sim,
-           CASE WHEN greatest(monge_elkan, monge_elkan_aliases, jaro_winkler, levenshtein) < 0.9
-                THEN 1 ELSE 0 END AS ignore_candidate
-    FROM f1
-),
-f3a AS MATERIALIZED (
-    SELECT *,
-           CASE WHEN (CASE WHEN greatest(length(lower(string_split(context, '|')[1])), length(lower(brand))) = 0 THEN 1.0 ELSE 1.0 - levenshtein(lower(string_split(context, '|')[1]), lower(brand)) * 1.0 / greatest(length(lower(string_split(context, '|')[1])), length(lower(brand))) END) >= 0.85 THEN 1 ELSE 0 END AS brand_match,
-           CASE WHEN (CASE WHEN greatest(length(string_split(context, '|')[2]), length(class)) = 0 THEN 1.0 ELSE 1.0 - levenshtein(string_split(context, '|')[2], class) * 1.0 / greatest(length(string_split(context, '|')[2]), length(class)) END) >= 0.85 THEN 1 ELSE 0 END AS class_match,
-           CASE WHEN (CASE WHEN greatest(CAST(string_split(context, '|')[3] AS DOUBLE), CAST(size AS DOUBLE)) = 0 THEN 1.0 ELSE least(CAST(string_split(context, '|')[3] AS DOUBLE), CAST(size AS DOUBLE)) / greatest(CAST(string_split(context, '|')[3] AS DOUBLE), CAST(size AS DOUBLE)) END) >= 0.9 THEN 1 ELSE 0 END AS size_match,
-           (CASE WHEN (CASE WHEN greatest(length(lower(string_split(context, '|')[1])), length(lower(brand))) = 0 THEN 1.0 ELSE 1.0 - levenshtein(lower(string_split(context, '|')[1]), lower(brand)) * 1.0 / greatest(length(lower(string_split(context, '|')[1])), length(lower(brand))) END) >= 0.85 THEN 1 ELSE 0 END) * (CASE WHEN greatest(length(lower(string_split(context, '|')[1])), length(lower(brand))) = 0 THEN 1.0 ELSE 1.0 - levenshtein(lower(string_split(context, '|')[1]), lower(brand)) * 1.0 / greatest(length(lower(string_split(context, '|')[1])), length(lower(brand))) END) AS brand_score,
-           (CASE WHEN (CASE WHEN greatest(length(string_split(context, '|')[2]), length(class)) = 0 THEN 1.0 ELSE 1.0 - levenshtein(string_split(context, '|')[2], class) * 1.0 / greatest(length(string_split(context, '|')[2]), length(class)) END) >= 0.85 THEN 1 ELSE 0 END) * (CASE WHEN greatest(length(string_split(context, '|')[2]), length(class)) = 0 THEN 1.0 ELSE 1.0 - levenshtein(string_split(context, '|')[2], class) * 1.0 / greatest(length(string_split(context, '|')[2]), length(class)) END) AS class_score,
-           (CASE WHEN (CASE WHEN greatest(CAST(string_split(context, '|')[3] AS DOUBLE), CAST(size AS DOUBLE)) = 0 THEN 1.0 ELSE least(CAST(string_split(context, '|')[3] AS DOUBLE), CAST(size AS DOUBLE)) / greatest(CAST(string_split(context, '|')[3] AS DOUBLE), CAST(size AS DOUBLE)) END) >= 0.9 THEN 1 ELSE 0 END) * (CASE WHEN greatest(CAST(string_split(context, '|')[3] AS DOUBLE), CAST(size AS DOUBLE)) = 0 THEN 1.0 ELSE least(CAST(string_split(context, '|')[3] AS DOUBLE), CAST(size AS DOUBLE)) / greatest(CAST(string_split(context, '|')[3] AS DOUBLE), CAST(size AS DOUBLE)) END) AS size_score
-    FROM f2
-),
-f3 AS MATERIALIZED (
-    SELECT *, round((brand_score + class_score + size_score) / 3.0, 6) AS context_score
-    FROM f3a
-),
-f4cells AS MATERIALIZED (SELECT count(DISTINCT row) AS n_cells FROM f3),
-f4 AS MATERIALIZED (
-    -- minimum_cells=10 gate mirrors features.kth_percentile's default:
-    -- a column with < 10 candidate-bearing cells emits no anchors
-    SELECT * EXCLUDE (n_cells) FROM (
-        SELECT f3.*, f4cells.n_cells,
-               CASE WHEN ignore_candidate = 0
-                     AND percent_rank() OVER (PARTITION BY ignore_candidate ORDER BY context_score) >= 0.75
-                     AND n_cells >= 10
-                    THEN 1 ELSE 0 END AS kth_percenter
-        FROM f3 CROSS JOIN f4cells)
-),
-f5 AS MATERIALIZED (
-    -- integer-micros product (mirrors operators/features.py::pgr_rts):
-    -- identical integer arithmetic on both engines, then one IEEE division
-    SELECT *,
-           CAST(floor(pagerank * 1e6 + 0.5) AS BIGINT)
-             * CAST(floor(retrieval_score * 1e6 + 0.5) AS BIGINT) AS pgr_rts_micro2,
-           (CAST(floor(pagerank * 1e6 + 0.5) AS BIGINT)
-             * CAST(floor(retrieval_score * 1e6 + 0.5) AS BIGINT)) / 1e12 AS pgr_rts
-    FROM f4
-),
-{CLASS_KEYS_CTE},
-{PROP_KEYS_CTE},
-{_tfidf_map_ctes("c", "f5", "class_keys", "kth_percenter")},
-f6 AS MATERIALIZED (SELECT f5.*, coalesce(cw.w, 0.0) AS smc_class_score FROM f5 LEFT JOIN cw USING (qnode)),
-{_tfidf_map_ctes("b", "f6", "prop_keys", "kth_percenter")},
-f7 AS MATERIALIZED (SELECT f6.*, coalesce(bw.w, 0.0) AS smc_property_score FROM f6 LEFT JOIN bw USING (qnode)),
-f8 AS MATERIALIZED (
-    SELECT *, length(kg_label) AS num_char, len(string_split(kg_label, ' ')) AS num_tokens
-    FROM f7
-),
-f9 AS MATERIALIZED (
-    -- x*n >= sum(x) in exact integer space (mirrors create_pseudo_gt
-    -- integral=True): no float summation order at the mean boundary
-    SELECT *,
-           CASE WHEN CAST(pgr_rts_micro2 AS HUGEINT) * count(*) OVER ()
-                     >= sum(CAST(pgr_rts_micro2 AS HUGEINT)) OVER ()
-                 AND smc_class_score > 0
-                THEN 1 ELSE 0 END AS pseudo_gt
-    FROM f8
-),
-rates AS MATERIALIZED (
-    SELECT CASE WHEN avg(brand_match) >= 0.5 THEN 1 ELSE 0 END AS rel_brand,
-           CASE WHEN avg(class_match) >= 0.5 THEN 1 ELSE 0 END AS rel_class,
-           CASE WHEN avg(size_match) >= 0.5 THEN 1 ELSE 0 END AS rel_size
-    FROM f9 WHERE kth_percenter = 1
-),
-f10 AS MATERIALIZED (
-    SELECT f9.*,
-           CASE WHEN (rel_brand + rel_class + rel_size) = 0 THEN 0.0
-                ELSE round((brand_score * rel_brand + class_score * rel_class
-                            + size_score * rel_size) * 1.0
-                           / (rel_brand + rel_class + rel_size), 6) END AS context_score_3
-    FROM f9 CROSS JOIN rates
-),
-cent AS MATERIALIZED (
-    SELECT i, round(avg(v), 6) AS c
-    FROM (SELECT unnest(embedding) AS v, unnest(generate_series(1, 8)) AS i
-          FROM f10 WHERE pseudo_gt = 1)
-    GROUP BY i
-),
-csums AS MATERIALIZED (
-    SELECT row, qnode, sum(v * c) AS dot, sum(v * v) AS nv, sum(c * c) AS nc
-    FROM (SELECT row, qnode, unnest(embedding) AS v,
-                 unnest(generate_series(1, 8)) AS i FROM f10) x
-    JOIN cent USING (i)
-    GROUP BY row, qnode
-),
-f11 AS MATERIALIZED (
-    SELECT f10.*,
-           CASE WHEN nv * nc = 0 THEN 0.0
-                ELSE round(dot / (sqrt(nv) * sqrt(nc)), 6) END AS pgt_centroid_score
-    FROM f10 LEFT JOIN csums USING (row, qnode)
-),
-{_tfidf_map_ctes("pc", "f11", "class_keys", "pseudo_gt")},
-f12 AS MATERIALIZED (SELECT f11.*, coalesce(pcw.w, 0.0) AS pgt_class_count_tf_idf_score
-        FROM f11 LEFT JOIN pcw USING (qnode)),
-{_tfidf_map_ctes("pb", "f12", "prop_keys", "pseudo_gt")},
-f13 AS MATERIALIZED (SELECT f12.*, coalesce(pbw.w, 0.0) AS pgt_property_count_tf_idf_score
-        FROM f12 LEFT JOIN pbw USING (qnode))
-"""
-)
-
-
 # ---------------- training-data ops: shared SQL fragments ----------------
 
 H60 = "CAST(('0x' || substr(md5({x}), 1, 15)) AS BIGINT)"
@@ -581,6 +442,186 @@ _FINAL_MLP_FEATURES = [
     ("pgt_property_count_tf_idf_score", 0.25, 0.0, 1.0),
     ("num_occurences", 0.5, 1.0, 4.0),
 ]
+
+FEATURE_CTES = (
+    LINKING_CTES
+    + f""",
+cand AS MATERIALIZED (
+    SELECT row, label_clean, qnode,
+           min(kg_label)                  AS kg_label,
+           round(max(pagerank), 6)        AS pagerank,
+           round(max(retrieval_score), 6) AS retrieval_score,
+           count(DISTINCT method)         AS num_occurences
+    FROM all_candidates GROUP BY 1, 2, 3
+),
+fullc AS MATERIALIZED (
+    SELECT c.row, c.label_clean, c.qnode, c.kg_label, c.pagerank,
+           c.retrieval_score, c.num_occurences,
+           e.aliases, e.class, e.embedding, m.context
+    FROM cand c
+    JOIN entity_index e ON c.qnode = e.qnode
+    JOIN mentions m ON c.row = m.row
+),
+sf AS MATERIALIZED (
+    SELECT *,
+           {_floor05(f'round({_sym_me("label_clean", "kg_label")}, 6)')} AS monge_elkan,
+           {_floor05(f'round(list_max([{_sym_me("label_clean", "al")} for al in aliases]), 6)')}
+                                                          AS monge_elkan_aliases,
+           {_floor05('round(jaro_winkler_similarity(label_clean, kg_label), 6)')} AS jaro_winkler,
+           {_floor05(f'round({_lev_sim("label_clean", "kg_label")}, 6)')} AS levenshtein
+    FROM fullc
+),
+f1 AS MATERIALIZED (
+    SELECT *, CASE WHEN count(*) OVER (PARTITION BY row) = 1 THEN 1 ELSE 0 END AS singleton
+    FROM sf
+),
+f2 AS MATERIALIZED (
+    SELECT *,
+           round(greatest(monge_elkan, monge_elkan_aliases, jaro_winkler, levenshtein), 6)
+               AS best_str_sim,
+           CASE WHEN greatest(monge_elkan, monge_elkan_aliases, jaro_winkler, levenshtein) < 0.9
+                THEN 1 ELSE 0 END AS ignore_candidate
+    FROM f1
+),
+-- typed property-ARRAY context match: candidate context entries
+-- (ctx_entries) × mention context tokens, best score per property in
+-- integer micros (mirrors features.context_match_array)
+{CTX_ENTRIES_CTE},
+ctoks AS MATERIALIZED (
+    SELECT row, unnest(string_split(context, '|')) AS t FROM cm
+),
+cprops AS MATERIALIZED (
+    SELECT c.row, c.qnode, e.property,
+           CAST(floor(max(
+               CASE WHEN e.vtype = 'string' THEN
+                        -- both sides non-empty (mirrors features.context_match_array:
+                        -- lev_sim('','')=1.0 must not match empty context tokens)
+                        (CASE WHEN length(t) > 0 AND length(e.value) > 0
+                               AND ({_lev_sim("lower(t)", "lower(e.value)")}) >= 0.85
+                              THEN ({_lev_sim("lower(t)", "lower(e.value)")}) ELSE 0.0 END)
+                    WHEN e.vtype = 'quantity' THEN
+                        (CASE WHEN regexp_matches(t, '^-?[0-9]+(\\.[0-9]+)?$')
+                               AND regexp_matches(e.value, '^-?[0-9]+(\\.[0-9]+)?$')
+                              THEN (CASE WHEN (CASE WHEN greatest(CAST(t AS DOUBLE), CAST(e.value AS DOUBLE)) = 0 THEN 1.0
+                                               ELSE least(CAST(t AS DOUBLE), CAST(e.value AS DOUBLE))
+                                                    / greatest(CAST(t AS DOUBLE), CAST(e.value AS DOUBLE)) END) >= 0.9
+                                          THEN (CASE WHEN greatest(CAST(t AS DOUBLE), CAST(e.value AS DOUBLE)) = 0 THEN 1.0
+                                               ELSE least(CAST(t AS DOUBLE), CAST(e.value AS DOUBLE))
+                                                    / greatest(CAST(t AS DOUBLE), CAST(e.value AS DOUBLE)) END)
+                                          ELSE 0.0 END)
+                              ELSE 0.0 END)
+                    ELSE
+                        (CASE WHEN regexp_matches(t, '^[0-9]{{4}}-[0-9]{{2}}-[0-9]{{2}}$')
+                               AND regexp_matches(e.value, '^[0-9]{{4}}-[0-9]{{2}}-[0-9]{{2}}$')
+                               AND TRY_CAST(t AS DATE) = TRY_CAST(e.value AS DATE)
+                               AND TRY_CAST(t AS DATE) IS NOT NULL
+                              THEN 1.0 ELSE 0.0 END)
+               END) * 1e6 + 0.5) AS BIGINT) AS micro
+    FROM (SELECT DISTINCT row, qnode FROM cand) c
+    JOIN ctx_entries e USING (qnode)
+    JOIN ctoks USING (row)
+    GROUP BY 1, 2, 3
+),
+ctx AS MATERIALIZED (
+    SELECT row, qnode,
+           CAST(count(*) AS BIGINT) AS n_ctx_props,
+           CAST(count(*) FILTER (WHERE micro > 0) AS BIGINT) AS n_ctx_matched,
+           round(sum(micro) / (count(*) * 1e6), 6) AS context_score
+    FROM cprops GROUP BY row, qnode
+),
+-- --use-relevant-properties (mirrors features.context_score_relevant): a
+-- property is relevant when it matched for at least half of the HC rows,
+-- 2·Σmatched ≥ Σ in integers; context_score_3 is the mean over relevant
+-- entries only
+rel AS MATERIALIZED (
+    SELECT property
+    FROM cprops JOIN f2 USING (row, qnode)
+    WHERE ignore_candidate = 0
+    GROUP BY property
+    HAVING 2 * count(*) FILTER (WHERE micro > 0) >= count(*)
+),
+ctx3 AS MATERIALIZED (
+    SELECT row, qnode, round(sum(micro) / (count(*) * 1e6), 6) AS context_score_3
+    FROM cprops JOIN rel USING (property) GROUP BY row, qnode
+),
+f3 AS MATERIALIZED (
+    SELECT f2.*,
+           coalesce(ctx.n_ctx_props, 0) AS n_ctx_props,
+           coalesce(ctx.n_ctx_matched, 0) AS n_ctx_matched,
+           coalesce(ctx.context_score, 0.0) AS context_score,
+           coalesce(ctx3.context_score_3, 0.0) AS context_score_3
+    FROM f2 LEFT JOIN ctx USING (row, qnode) LEFT JOIN ctx3 USING (row, qnode)
+),
+f4cells AS MATERIALIZED (SELECT count(DISTINCT row) AS n_cells FROM f3),
+f4 AS MATERIALIZED (
+    -- minimum_cells=10 gate mirrors features.kth_percentile's default:
+    -- a column with < 10 candidate-bearing cells emits no anchors
+    SELECT * EXCLUDE (n_cells) FROM (
+        SELECT f3.*, f4cells.n_cells,
+               CASE WHEN ignore_candidate = 0
+                     AND percent_rank() OVER (PARTITION BY ignore_candidate ORDER BY context_score) >= 0.75
+                     AND n_cells >= 10
+                    THEN 1 ELSE 0 END AS kth_percenter
+        FROM f3 CROSS JOIN f4cells)
+),
+f5 AS MATERIALIZED (
+    -- integer-micros product (mirrors operators/features.py::pgr_rts):
+    -- identical integer arithmetic on both engines, then one IEEE division
+    SELECT *,
+           CAST(floor(pagerank * 1e6 + 0.5) AS BIGINT)
+             * CAST(floor(retrieval_score * 1e6 + 0.5) AS BIGINT) AS pgr_rts_micro2,
+           (CAST(floor(pagerank * 1e6 + 0.5) AS BIGINT)
+             * CAST(floor(retrieval_score * 1e6 + 0.5) AS BIGINT)) / 1e12 AS pgr_rts
+    FROM f4
+),
+{CLASS_KEYS_CTE},
+{PROP_KEYS_CTE},
+{_tfidf_map_ctes("c", "f5", "class_keys", "kth_percenter")},
+f6 AS MATERIALIZED (SELECT f5.*, coalesce(cw.w, 0.0) AS smc_class_score FROM f5 LEFT JOIN cw USING (qnode)),
+{_tfidf_map_ctes("b", "f6", "prop_keys", "kth_percenter")},
+f7 AS MATERIALIZED (SELECT f6.*, coalesce(bw.w, 0.0) AS smc_property_score FROM f6 LEFT JOIN bw USING (qnode)),
+pgp AS MATERIALIZED (
+    {_calibrated_mlp_sql(_PSEUDO_GT_MLP_FEATURES, 4.0, -16.0, "pseudo_gt_prediction", "f7")}
+),
+f8 AS MATERIALIZED (
+    -- pseudo-GT anchored on the pseudo-GT MLP: x*n >= sum(x) over the
+    -- prediction's integer micros (mirrors create_pseudo_gt), so no float
+    -- summation order decides a row at the mean boundary
+    SELECT *,
+           CASE WHEN CAST(floor(pseudo_gt_prediction * 1e6 + 0.5) AS HUGEINT) * count(*) OVER ()
+                     >= sum(CAST(floor(pseudo_gt_prediction * 1e6 + 0.5) AS HUGEINT)) OVER ()
+                 AND smc_class_score > 0
+                THEN 1 ELSE 0 END AS pseudo_gt
+    FROM f7 JOIN pgp USING (row, qnode)
+),
+cent AS MATERIALIZED (
+    SELECT i, round(avg(v), 6) AS c
+    FROM (SELECT unnest(embedding) AS v, unnest(generate_series(1, 8)) AS i
+          FROM f8 WHERE pseudo_gt = 1)
+    GROUP BY i
+),
+csums AS MATERIALIZED (
+    SELECT row, qnode, sum(v * c) AS dot, sum(v * v) AS nv, sum(c * c) AS nc
+    FROM (SELECT row, qnode, unnest(embedding) AS v,
+                 unnest(generate_series(1, 8)) AS i FROM f8) x
+    JOIN cent USING (i)
+    GROUP BY row, qnode
+),
+f9 AS MATERIALIZED (
+    SELECT f8.*,
+           CASE WHEN nv * nc = 0 THEN 0.0
+                ELSE round(dot / (sqrt(nv) * sqrt(nc)), 6) END AS pgt_centroid_score
+    FROM f8 LEFT JOIN csums USING (row, qnode)
+),
+{_tfidf_map_ctes("pc", "f9", "class_keys", "pseudo_gt")},
+f10 AS MATERIALIZED (SELECT f9.*, coalesce(pcw.w, 0.0) AS pgt_class_count_tf_idf_score
+        FROM f9 LEFT JOIN pcw USING (qnode)),
+{_tfidf_map_ctes("pb", "f10", "prop_keys", "pseudo_gt")},
+f11 AS MATERIALIZED (SELECT f10.*, coalesce(pbw.w, 0.0) AS pgt_property_count_tf_idf_score
+        FROM f10 LEFT JOIN pbw USING (qnode))
+"""
+)
+
 
 _LANG_SCORES = ",\n           ".join(
     f"len(list_filter(toks, t -> list_contains({words!r}, t))) AS score_{lang}"
@@ -783,11 +824,10 @@ ORACLES: dict[str, str] = {
     + """SELECT row, qnode, label_clean, kg_label, monge_elkan,
                 monge_elkan_aliases, jaro_winkler, levenshtein FROM sf""",
     "features_singleton_hc": FEATURE_CTES
-    + """SELECT row, qnode, singleton, best_str_sim, ignore_candidate,
-                num_char, num_tokens FROM f8""",
+    + "SELECT row, qnode, singleton, best_str_sim, ignore_candidate FROM f2",
     "features_context_match": FEATURE_CTES
-    + """SELECT row, qnode, brand_match, class_match, size_match, context_score,
-                context_score_3 FROM f10""",
+    + """SELECT row, qnode, n_ctx_props, n_ctx_matched, context_score,
+                context_score_3 FROM f3""",
     "features_kth_percentile": FEATURE_CTES
     + "SELECT row, qnode, kth_percenter, pgr_rts FROM f5",
     "features_context_match_typed": f"""
@@ -851,13 +891,13 @@ ORACLES: dict[str, str] = {
     """,
     "features_smc_tfidf_map": FEATURE_CTES
     + "SELECT row, qnode, smc_class_score, smc_property_score FROM f7",
-    "features_pseudo_gt": FEATURE_CTES + "SELECT row, qnode, pseudo_gt FROM f9",
+    "features_pseudo_gt": FEATURE_CTES + "SELECT row, qnode, pseudo_gt FROM f8",
     "features_centroid": FEATURE_CTES
-    + "SELECT row, qnode, pgt_centroid_score FROM f11",
+    + "SELECT row, qnode, pgt_centroid_score FROM f9",
     # centroid-of-lof: the Spark query materialized the LOF-INLIER anchor
     # qnodes (the only non-SQL step) to the shared handoff; the oracle
     # recomputes the centroid over exactly those anchors and the cosine
-    # join-back — the same SQL tail as features_centroid (f11) but with
+    # join-back — the same SQL tail as features_centroid (f9) but with
     # the survivor-set centroid
     "features_centroid_lof": FEATURE_CTES
     + f""",
@@ -868,8 +908,8 @@ ORACLES: dict[str, str] = {
           AND n_li = (SELECT count(*) FROM lineitem)
     ),
     lof_emb AS MATERIALIZED (
-        SELECT DISTINCT f10.qnode, f10.embedding
-        FROM f10 JOIN lof_surv USING (qnode)
+        SELECT DISTINCT f8.qnode, f8.embedding
+        FROM f8 JOIN lof_surv USING (qnode)
     ),
     lof_cent AS MATERIALIZED (
         SELECT i, round(avg(v), 6) AS c
@@ -880,30 +920,28 @@ ORACLES: dict[str, str] = {
     lof_sums AS MATERIALIZED (
         SELECT row, qnode, sum(v * c) AS dot, sum(v * v) AS nv, sum(c * c) AS nc
         FROM (SELECT row, qnode, unnest(embedding) AS v,
-                     unnest(generate_series(1, 8)) AS i FROM f10) x
+                     unnest(generate_series(1, 8)) AS i FROM f8) x
         JOIN lof_cent USING (i)
         GROUP BY row, qnode
     )
-    SELECT f10.row, f10.qnode,
+    SELECT f8.row, f8.qnode,
            coalesce(CASE WHEN nv * nc = 0 THEN 0.0
                          ELSE round(dot / (sqrt(nv) * sqrt(nc)), 6) END,
                     0.0) AS pgt_centroid_lof_score
-    FROM f10 LEFT JOIN lof_sums USING (row, qnode)
+    FROM f8 LEFT JOIN lof_sums USING (row, qnode)
     """,
     "features_pgt_tfidf_map": FEATURE_CTES
     + """SELECT row, qnode, pgt_class_count_tf_idf_score,
-                pgt_property_count_tf_idf_score FROM f13""",
+                pgt_property_count_tf_idf_score FROM f11""",
     # ranker MLPs (r06, VERDICT r05 #3): the CALIBRATED network collapses
     # to sigmoid(gain·relu(w·x_scaled)+bias) exactly (see
     # _calibrated_mlp_sql), so both forward passes ARE SQL-expressible
     # and the last two checkable no_oracle rows flip to hash-exact.
     "ranker_pseudo_gt_mlp": FEATURE_CTES
-    + _calibrated_mlp_sql(
-        _PSEUDO_GT_MLP_FEATURES, 4.0, -16.0, "pseudo_gt_prediction", "f13"
-    ),
+    + "SELECT row, qnode, pseudo_gt_prediction FROM pgp",
     "ranker_siamese_mlp": FEATURE_CTES
     + _calibrated_mlp_sql(
-        _FINAL_MLP_FEATURES, 4.0, -24.0, "siamese_prediction", "f13"
+        _FINAL_MLP_FEATURES, 4.0, -24.0, "siamese_prediction", "f11"
     ),
     "kg_links_top3": FEATURE_CTES
     + """
@@ -963,76 +1001,13 @@ ORACLES: dict[str, str] = {
             FROM cand)
         WHERE rank <= 3
     """,
-    # typed property-ARRAY context match — candidate context entries
-    # (ctx_entries) × mention context tokens, best score per property,
-    # integer-micros mean (mirrors features.context_match_array)
+    # typed property-ARRAY context match: the chain's pass-1 context
     "features_context_match_array": FEATURE_CTES
-    + f""",
-    {CTX_ENTRIES_CTE},
-    ctoks AS MATERIALIZED (
-        SELECT row, unnest(string_split(context, '|')) AS t FROM cm
-    ),
-    cprops AS MATERIALIZED (
-        SELECT c.row, c.qnode, e.property,
-               CAST(floor(max(
-                   CASE WHEN e.vtype = 'string' THEN
-                            -- both sides non-empty (mirrors features.context_match_array:
-                            -- lev_sim('','')=1.0 must not match empty context tokens)
-                            (CASE WHEN length(t) > 0 AND length(e.value) > 0
-                                   AND ({_lev_sim("lower(t)", "lower(e.value)")}) >= 0.85
-                                  THEN ({_lev_sim("lower(t)", "lower(e.value)")}) ELSE 0.0 END)
-                        WHEN e.vtype = 'quantity' THEN
-                            (CASE WHEN regexp_matches(t, '^-?[0-9]+(\\.[0-9]+)?$')
-                                   AND regexp_matches(e.value, '^-?[0-9]+(\\.[0-9]+)?$')
-                                  THEN (CASE WHEN (CASE WHEN greatest(CAST(t AS DOUBLE), CAST(e.value AS DOUBLE)) = 0 THEN 1.0
-                                                   ELSE least(CAST(t AS DOUBLE), CAST(e.value AS DOUBLE))
-                                                        / greatest(CAST(t AS DOUBLE), CAST(e.value AS DOUBLE)) END) >= 0.9
-                                              THEN (CASE WHEN greatest(CAST(t AS DOUBLE), CAST(e.value AS DOUBLE)) = 0 THEN 1.0
-                                                   ELSE least(CAST(t AS DOUBLE), CAST(e.value AS DOUBLE))
-                                                        / greatest(CAST(t AS DOUBLE), CAST(e.value AS DOUBLE)) END)
-                                              ELSE 0.0 END)
-                                  ELSE 0.0 END)
-                        ELSE
-                            (CASE WHEN regexp_matches(t, '^[0-9]{{4}}-[0-9]{{2}}-[0-9]{{2}}$')
-                                   AND regexp_matches(e.value, '^[0-9]{{4}}-[0-9]{{2}}-[0-9]{{2}}$')
-                                   AND TRY_CAST(t AS DATE) = TRY_CAST(e.value AS DATE)
-                                   AND TRY_CAST(t AS DATE) IS NOT NULL
-                                  THEN 1.0 ELSE 0.0 END)
-                   END) * 1e6 + 0.5) AS BIGINT) AS micro
-        FROM (SELECT DISTINCT row, qnode FROM cand) c
-        JOIN ctx_entries e USING (qnode)
-        JOIN ctoks USING (row)
-        GROUP BY 1, 2, 3
-    )
-    SELECT row, qnode,
-           CAST(count(*) AS BIGINT) AS n_ctx_props,
-           CAST(count(*) FILTER (WHERE micro > 0) AS BIGINT) AS n_ctx_matched,
-           round(sum(micro) / (count(*) * 1e6), 6) AS context_score_array
-    FROM cprops GROUP BY row, qnode
-    """,
-    # MLP-anchored pseudo-GT: the Spark query wrote its pseudo-GT MLP
-    # scores (exact integer micros) to the shared parquet handoff; the
-    # oracle reads the SAME file and checks the downstream per-mean
-    # boolean exactly (reference anchoring, wikifier.py:184-186)
+    + """SELECT row, qnode, n_ctx_props, n_ctx_matched,
+                context_score AS context_score_array FROM f3""",
+    # MLP-anchored pseudo-GT (wikifier.py:184-186): the chain's pseudo_gt
     "features_pseudo_gt_mlp_anchor": FEATURE_CTES
-    + f""",
-    mlp AS MATERIALIZED (
-        SELECT row, qnode, pred_micro
-        FROM read_parquet('{ORACLE_CACHE}/pseudo_gt_pred/*/*.parquet', union_by_name=true)
-        WHERE n_part = (SELECT count(*) FROM part)
-          AND n_li = (SELECT count(*) FROM lineitem)
-    ),
-    mlpb AS MATERIALIZED (
-        SELECT f7.row, f7.qnode, f7.smc_class_score, mlp.pred_micro
-        FROM f7 JOIN mlp USING (row, qnode)
-    )
-    SELECT row, qnode,
-           CASE WHEN CAST(pred_micro AS HUGEINT) * count(*) OVER ()
-                     >= sum(CAST(pred_micro AS HUGEINT)) OVER ()
-                 AND smc_class_score > 0
-                THEN 1 ELSE 0 END AS pseudo_gt_mlp
-    FROM mlpb
-    """,
+    + "SELECT row, qnode, pseudo_gt AS pseudo_gt_mlp FROM f8",
     # end-to-end pipeline output tail: both engines read the SAME final-MLP
     # score parquet the Spark query materialized; the oracle re-derives the
     # top-1 window (identical tie-break: score DESC, retrieval DESC, qnode
@@ -1363,10 +1338,10 @@ ORACLES: dict[str, str] = {
     + """,
     top1 AS MATERIALIZED (
         SELECT row, qnode, class FROM (
-            SELECT f13.row, f13.qnode, f13.class,
-                   row_number() OVER (PARTITION BY f13.row
-                       ORDER BY f13.retrieval_score DESC, f13.qnode ASC) AS rank
-            FROM f13)
+            SELECT f11.row, f11.qnode, f11.class,
+                   row_number() OVER (PARTITION BY f11.row
+                       ORDER BY f11.retrieval_score DESC, f11.qnode ASC) AS rank
+            FROM f11)
         WHERE rank = 1
     ),
     trip AS (

@@ -4,19 +4,131 @@ MLP re-ranking → top-k links → canonicalization → triples.
 
 This is the Spark re-expression of the reference's three `tl` chains
 (wikifier/wikifier.py:79-224) as ONE lazy DataFrame DAG with explicit
-barriers only where fan-out would re-execute expensive stages.
+barriers only where fan-out would re-execute expensive stages. The feature
+chain (wikifier.py:148-205) is composed once, in feature_chain: wikify runs
+it label-level, and the oracle-checked board (queries.featured_candidates)
+runs the same function row-level.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType
 
 from .operators import candidates as cand_ops
 from .operators import features, ranker, topk
 from .operators.connected_components import connected_components
 from .operators.mentions import detect_mentions
 from .plans.barrier import barrier
+from .plans.skew import size_aware_broadcast
+from .schemas import CONTEXT_ENTRY
+
+
+def feature_chain(
+    cands: DataFrame,
+    index: DataFrame,
+    idx_rows: int,
+    *,
+    cell_col: str,
+    weight_col: str | None = None,
+) -> DataFrame:
+    """The §2.4 feature chain (wikifier.py:148-205), from the string
+    similarities through the pseudo-GT-anchored tf-idf. It stops before the
+    final ranker: each caller applies its own calibration.
+
+    cands: one row per (cell, candidate) with cell_col, label_clean, qnode,
+    kg_label, pagerank and retrieval_score (both 6-dp-rounded),
+    num_occurences and context (the cell's '|'-separated context tokens);
+    other columns ride through. cell_col names the input cell: `row` for
+    one mention, or `label_clean` for one distinct label standing for
+    weight_col mentions. Every weighted aggregate reproduces the row-level
+    result exactly (tests/test_label_level.py).
+
+    index: ENTITY_INDEX with idx_rows rows (the size hint of every
+    index-side join). An index without context_arr scores every context
+    feature 0.
+
+    Three choices are settled here, once:
+    - context: the typed property array (context_match_array), then the
+      --use-relevant-properties second pass (context_score_relevant);
+    - kth-percentile anchors on context_score, the reference's
+      `-c context_score` (wikifier.py:163);
+    - pseudo-GT anchors on the pseudo-GT MLP, compared with its mean in
+      exact integer micros (wikifier.py:184-186).
+    Every §2.4 operator is called through the `features` module, where
+    the traced benchmark (kgbench/run.py) patches it.
+    """
+    if "context_arr" in index.columns:
+        ctx_dim = index.select("qnode", "context_arr")
+    else:
+        ctx_dim = index.select(
+            "qnode", F.lit(None).cast(ArrayType(CONTEXT_ENTRY)).alias("context_arr")
+        )
+    full = cands.join(size_aware_broadcast(ctx_dim, idx_rows), "qnode", "left")
+    full = features.context_match_array(
+        full, out="context_score", keep_micros="_ctx_micros"
+    )
+    # the string-sim pair table and its join-back both read this
+    full = barrier(full)
+    f = features.string_similarity_features(
+        full, index.select("qnode", "aliases"), dim_rows=idx_rows
+    )
+    f = features.singleton_feature(f, cell_cols=[cell_col])
+    f = features.pick_hc_candidates(f)
+    # the relevance-rate aggregate and the main table both read f; without
+    # the barrier the string-sim kernel runs once per branch
+    f = barrier(f)
+    f = features.context_score_relevant(f, weight_col=weight_col).drop(
+        "context_arr", "_ctx_micros"
+    )
+    f = features.pgr_rts(f)
+    f = barrier(f)
+    f = features.kth_percentile(f, cell_col=cell_col, weight_col=weight_col)
+    # class_count / property_count maps (wikifier.py:165-178): tf-idf over
+    # the exploded key sets
+    cls_dim = index.select("qnode", F.explode(F.map_keys("class_count")).alias("key"))
+    prop_dim = index.select(
+        "qnode", F.explode(F.map_keys("property_count")).alias("key")
+    )
+    f = features.semantic_tfidf_map_multi(
+        f,
+        [(cls_dim, "smc_class_score"), (prop_dim, "smc_property_score")],
+        "kth_percenter",
+        weight_col=weight_col,
+        dim_rows=idx_rows,
+    )
+    f = ranker.predict_using_model(
+        f,
+        ranker.PSEUDO_GT_FEATURES,
+        ranker.pseudo_gt_weights(),
+        ranker.PSEUDO_GT_DATA_MIN,
+        ranker.PSEUDO_GT_DATA_MAX,
+        "pseudo_gt_prediction",
+    )
+    # the prediction is 6-dp-rounded, so its integer micros are exact and
+    # the mean threshold is the same for every partitioning and engine
+    f = f.withColumn(
+        "_pred_micro",
+        F.floor(F.col("pseudo_gt_prediction") * 1e6 + F.lit(0.5)).cast("long"),
+    )
+    f = features.create_pseudo_gt(
+        f, "_pred_micro", "smc_class_score", weight_col=weight_col
+    ).drop("_pred_micro")
+    f = barrier(f)
+    f = features.embedding_centroid_score(
+        f, index.select("qnode", "embedding"), weight_col=weight_col, dim_rows=idx_rows
+    )
+    return features.semantic_tfidf_map_multi(
+        f,
+        [
+            (cls_dim, "pgt_class_count_tf_idf_score"),
+            (prop_dim, "pgt_property_count_tf_idf_score"),
+        ],
+        "pseudo_gt",
+        weight_col=weight_col,
+        dim_rows=idx_rows,
+    )
 
 
 def wikify(
@@ -46,6 +158,10 @@ def wikify(
     ONE label-keyed fan-out join at the end — the shape that survives a
     10^12-file input, since per-label state grows with the vocabulary,
     not the corpus.
+
+    The features are feature_chain with cell_col="label_clean",
+    weight_col="w"; the final ranker uses the pipeline_ranker_weights
+    calibration.
     """
     mentions = detect_mentions(source, with_context=False)
     # mentions feed the label-weight aggregate + the final fan-out; the
@@ -64,132 +180,28 @@ def wikify(
     # their row-level counterparts (integer sums, no float order effects)
     lab_w = m.groupBy("label_clean").agg(F.count(F.lit(1)).alias("w"))
 
-    from .plans.skew import size_aware_broadcast
-
     lab_cands, idx_rows = cand_ops.label_candidates(
         m.select("label_clean"), index.select("qnode", "label", "aliases", "pagerank")
     )
     if stats is not None:
         stats["idx_rows"] = idx_rows
-    # every index-side dimension join carries the exact idx_rows hint so
-    # the broadcast degrades to a shuffle join past BROADCAST_MAX_ROWS
-    # (a ~100M-entity index must NOT be driver-broadcast)
+    # a label's context is its co-mention profile: the top labels sharing
+    # files with it (vocabulary-scale; mention-scale co-occurrence
+    # aggregation only)
+    from .operators.mentions import label_context
+
     full = (
         lab_cands.join(lab_w, "label_clean")
-        .join(size_aware_broadcast(index.select("qnode", "class"), idx_rows), "qnode")
+        .join(label_context(m), "label_clean", "left")
         .select(
-            "label_clean", "qnode", "kg_label", "w", "class",
+            "label_clean", "qnode", "kg_label", "w",
             F.round("pagerank", 6).alias("pagerank"),
             F.round("retrieval_score", 6).alias("retrieval_score"),
             "num_occurences",
+            F.coalesce(F.col("context"), F.lit("")).alias("context"),
         )
     )
-    # REAL context when the index carries the typed property array
-    # (context.jl analogue): each label's context is its co-mention
-    # profile (top-N labels sharing files with it — vocabulary-scale),
-    # scored against the candidate's context_arr by the SAME
-    # context_match_array operator the tabular path uses. One extra
-    # vocabulary-scale join pair; zero corpus-scale work beyond the
-    # (already mention-scale) co-occurrence aggregation.
-    use_context = "context_arr" in index.columns
-    if use_context:
-        from .operators.mentions import label_context
-
-        lab_ctx = label_context(m)
-        full = (
-            full.join(lab_ctx, "label_clean", "left")
-            .withColumn("context", F.coalesce(F.col("context"), F.lit("")))
-            .join(
-                size_aware_broadcast(
-                    index.select("qnode", "context_arr"), idx_rows
-                ),
-                "qnode",
-                "left",
-            )
-        )
-        full = features.context_match_array(
-            full, out="context_score_arr", keep_micros="_ctx_micros"
-        ).drop("context", "n_ctx_props", "n_ctx_matched")
-    full = barrier(full)  # vocabulary-sized: barrier is ~free
-    f = features.string_similarity_features(
-        full, alias_dim=index.select("qnode", "aliases"), dim_rows=idx_rows
-    )
-    f = features.singleton_feature(f, cell_cols=["label_clean"])
-    f = features.pick_hc_candidates(f)
-    if use_context:
-        # co-mention context vs the index's typed property arrays.
-        # context_score = pass-1 full mean; context_score_3 = the
-        # --use-relevant-properties SECOND pass (wikifier.py:187-189):
-        # per-property match rates over the HC candidates (ignore_candidate
-        # = 0, exact integer weights) pick the relevant property set, and
-        # the score is re-derived restricted to it — a genuinely distinct
-        # ranker signal, not an alias of pass 1.
-        f = f.withColumn("context_score", F.col("context_score_arr"))
-        # the relevance-rate aggregate and the main table both read f —
-        # barrier (vocabulary-scale, ~free) so the string-sim kernel isn't
-        # recomputed by the second branch of the fan-out
-        f = barrier(f)
-        f = features.context_score_relevant(f, weight_col="w")
-        f = f.drop("context_score_arr", "context_arr", "_ctx_micros")
-    else:
-        # no context source (index without context_arr) → scores are 0;
-        # kth-percentile anchoring falls back to string-sim quality
-        f = f.withColumn("context_score", F.lit(0.0)).withColumn(
-            "context_score_3", F.lit(0.0)
-        )
-    f = features.pgr_rts(f)
-    f = barrier(f)
-    f = features.kth_percentile(
-        f, score_col="best_str_sim", cell_col="label_clean", weight_col="w"
-    )
-    # REAL class/property count-map features (wikifier.py:165-178): the
-    # index carries class_count/property_count maps; both TF-IDF features
-    # are computed over the exploded key sets — no more aliasing the class
-    # score into the property slot (10 genuinely distinct ranker signals)
-    cls_dim = index.select("qnode", F.explode(F.map_keys("class_count")).alias("key"))
-    prop_dim = index.select(
-        "qnode", F.explode(F.map_keys("property_count")).alias("key")
-    )
-    f = features.semantic_tfidf_map_multi(
-        f,
-        [(cls_dim, "smc_class_score"), (prop_dim, "smc_property_score")],
-        "kth_percenter",
-        weight_col="w",
-        dim_rows=idx_rows,
-    )
-    f = ranker.predict_using_model(
-        f,
-        ranker.PSEUDO_GT_FEATURES,
-        ranker.pseudo_gt_weights(),
-        ranker.PSEUDO_GT_DATA_MIN,
-        ranker.PSEUDO_GT_DATA_MAX,
-        "pseudo_gt_prediction",
-    )
-    # mean threshold in exact integer micros (prediction is 6-dp-rounded):
-    # deterministic across partitionings and identical to the row-level
-    # weighted mean
-    f = f.withColumn(
-        "_pred_micro",
-        F.floor(F.col("pseudo_gt_prediction") * 1e6 + F.lit(0.5)).cast("long"),
-    )
-    f = features.create_pseudo_gt(
-        f, "_pred_micro", "smc_class_score", integral=True, weight_col="w"
-    )
-    f = barrier(f)
-    f = features.embedding_centroid_score(
-        f, emb_dim=index.select("qnode", "embedding"),
-        weight_col="w", dim_rows=idx_rows,
-    )
-    f = features.semantic_tfidf_map_multi(
-        f,
-        [
-            (cls_dim, "pgt_class_count_tf_idf_score"),
-            (prop_dim, "pgt_property_count_tf_idf_score"),
-        ],
-        "pseudo_gt",
-        weight_col="w",
-        dim_rows=idx_rows,
-    )
+    f = feature_chain(full, index, idx_rows, cell_col="label_clean", weight_col="w")
     f = ranker.predict_using_model(
         f,
         ranker.FINAL_FEATURES,
@@ -246,8 +258,6 @@ def canonicalize_links(
     The component map is NODE-scale (the sameAs graph can approach index
     scale), so the join is size-aware: hintless → shuffle join with AQE
     promotion, never a forced driver broadcast of an index-sized map."""
-    from .plans.skew import size_aware_broadcast
-
     comp = connected_components(alias_edges)
     return (
         links.join(

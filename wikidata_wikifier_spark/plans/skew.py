@@ -68,8 +68,3 @@ def size_aware_broadcast(df: DataFrame, n_rows_hint: int | None = None) -> DataF
     if n_rows_hint is None or n_rows_hint > BROADCAST_MAX_ROWS:
         return df
     return F.broadcast(df)
-
-
-def top_hot_keys(df: DataFrame, key: str, top_n: int = 100) -> DataFrame:
-    """Identify head keys worth salting (driver-side decision input)."""
-    return df.groupBy(key).count().orderBy(F.desc("count")).limit(top_n)

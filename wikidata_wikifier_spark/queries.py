@@ -18,12 +18,8 @@ from pyspark.sql import functions as F
 
 from .operators import analytics, candidates, features, ranker, topk
 from .operators.canonicalize import canonicalize, clean
-from .operators.linking_fixture import (
-    class_key_dim,
-    cleaned_mentions,
-    entity_index,
-    property_key_dim,
-)
+from .operators.linking_fixture import class_key_dim, cleaned_mentions, entity_index
+from .pipeline import feature_chain
 from .plans.barrier import barrier
 from .sources.tpch import load_table, table_rows
 
@@ -171,13 +167,12 @@ _FEATURED_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
 def featured_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Candidate table + the full §2.4 feature chain (shared by the
-    feature queries below; every step mirrored in oracles.FEATURE_CTES)."""
+    """Candidate table + pipeline.feature_chain run row-level (cell =
+    mention row), shared by the feature queries below; every step is
+    mirrored in oracles.FEATURE_CTES."""
     key = (spark.sparkContext.applicationId, sf_dir)
     if key in _FEATURED_CACHE:
         return _FEATURED_CACHE[key]
-    m = cleaned_mentions(spark, sf_dir)
-    idx = entity_index(spark, sf_dir)
     c = raw_candidates(spark, sf_dir).select(
         "row",
         "label_clean",
@@ -186,88 +181,18 @@ def featured_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("pagerank", 6).alias("pagerank"),
         F.round("retrieval_score", 6).alias("retrieval_score"),
         "num_occurences",
-    )
-    # only per-qnode SCALARS ride on the candidate table; the aliases and
-    # embedding ARRAYS stay in dimension tables joined where needed — they
-    # would otherwise be carried through every shuffle and checkpoint
-    from .plans.skew import size_aware_broadcast
-
-    idx_rows = index_rows(spark, sf_dir)
-    full = c.join(
-        size_aware_broadcast(idx.select("qnode", "class", "brand", "size"), idx_rows),
-        "qnode",
-    ).join(m.select("row", "context"), "row")
+    ).join(cleaned_mentions(spark, sf_dir).select("row", "context"), "row")
     # spread before the feature stages: upstream AQE coalesces the capped
-    # candidate table to 1-2 partitions, which would serialize them.
-    # barrier: string_similarity_features reads its input twice
-    # (distinct-pair side + join-back side) — without the barrier the whole
-    # candidate generation runs 2×.
+    # candidate table to 1-2 partitions, which would serialize them
     n_parts = max(spark.sparkContext.defaultParallelism * 2, 16)
-    full = barrier(full.repartition(n_parts, F.col("row")))
-    f = features.string_similarity_features(
-        full, alias_dim=idx.select("qnode", "aliases"), dim_rows=idx_rows
+    f = feature_chain(
+        c.repartition(n_parts, F.col("row")),
+        entity_index(spark, sf_dir),
+        index_rows(spark, sf_dir),
+        cell_col="row",
     )
-    f = features.singleton_feature(f)
-    f = features.pick_hc_candidates(f)
-    f = features.context_match(f)
-    f = features.pgr_rts(f)
-    # Cut lineage BEFORE kth_percentile: it references its input twice
-    # (distribution table + join-back), which without a barrier re-executes
-    # the entire candidate generation + string-sim chain 2× (measured ~20s
-    # of the 40s phase at sf0.1).
-    f = barrier(f)
-    f = features.kth_percentile(f)
-    # Second barrier before the aggregate fan-outs: every tfidf/rates/
-    # centroid stage references the table 2-4×, so both runtime and
-    # Catalyst analysis (plan tree ~4× per stage) blow up exponentially
-    # without it. Cheap: materializes a broadcast join over the first
-    # checkpoint's leaf.
-    f = barrier(f)
-    # real class_count/property_count MAP features (multi-class entities,
-    # property distributions) — replaces the former scalar class + brand
-    # proxy (wikifier.py:165-178: --feature-name class_count/property_count)
-    cls_dim = class_key_dim(spark, sf_dir).select("qnode", "key")
-    prop_dim = property_key_dim(spark, sf_dir).select("qnode", "key")
-    f = features.semantic_tfidf_map_multi(
-        f,
-        [(cls_dim, "smc_class_score"), (prop_dim, "smc_property_score")],
-        "kth_percenter",
-        dim_rows=idx_rows,
-    )
-    # barrier directly after the tf-idf fan-out: create_pseudo_gt and
-    # context_match_relevant each read their input twice — without it the
-    # smc aggregates re-execute ~4x inside the next checkpoint's plan
-    f = barrier(f)
-    f = features.mosaic_features(f)
-    # ANSI-oracle proxy anchoring: the reference anchors create-pseudo-gt on
-    # the pseudo-GT MLP prediction (wikifier.py:184-186) — pipeline.wikify
-    # and q_wikify_end_to_end do exactly that; here the oracle-checked chain
-    # anchors on the exact-integer pgr_rts product instead, because the MLP
-    # forward pass is not ANSI-SQL-expressible and every downstream
-    # oracle-checked feature (centroid, pgt tf-idf) hangs off this boolean.
-    f = features.create_pseudo_gt(
-        f, "pgr_rts_micro2", "smc_class_score", "pseudo_gt", integral=True
-    )
-    f = features.context_match_relevant(f)
-    f = barrier(f)
-    f = features.embedding_centroid_score(
-        f, emb_dim=idx.select("qnode", "embedding"), dim_rows=idx_rows
-    )
-    # barrier between the two qnode-keyed fan-outs (centroid reads its
-    # input 3x, the pgt tf-idf another 3x — multiplicative without a cut)
-    f = barrier(f)
-    f = features.semantic_tfidf_map_multi(
-        f,
-        [
-            (cls_dim, "pgt_class_count_tf_idf_score"),
-            (prop_dim, "pgt_property_count_tf_idf_score"),
-        ],
-        "pseudo_gt",
-        dim_rows=idx_rows,
-    )
-    f = barrier(f)
-    _FEATURED_CACHE[key] = f
-    return f
+    _FEATURED_CACHE[key] = barrier(f)
+    return _FEATURED_CACHE[key]
 
 
 def _feature_query(*cols: str) -> QueryFn:
@@ -449,7 +374,7 @@ def q_per_column_thresholds(spark: SparkSession, sf_dir: str) -> DataFrame:
         df, score_col="score", column_col="column", minimum_cells=10
     )
     out = features.create_pseudo_gt(
-        out, "score", filter_col="score", integral=True, column_col="column"
+        out, "score", filter_col="score", column_col="column"
     )
     return out.select("column", "row", "kth_percenter", "pseudo_gt")
 
@@ -479,15 +404,10 @@ def q_context_match_array(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Typed property-ARRAY context match (context.jl analogue): the
     candidate's context rides the index row as
     array<struct<property,value,type>> — no pre-pivoted property columns
-    needed (features.context_match_array)."""
-    from .plans.skew import size_aware_broadcast
-
-    f = featured_candidates(spark, sf_dir).select("row", "qnode", "context")
-    idx = entity_index(spark, sf_dir).select("qnode", "context_arr")
-    cands = f.join(size_aware_broadcast(idx, index_rows(spark, sf_dir)), "qnode")
-    out = features.context_match_array(cands)
-    return out.select(
-        "row", "qnode", "n_ctx_props", "n_ctx_matched", "context_score_array"
+    needed (features.context_match_array, the chain's pass-1 context)."""
+    return featured_candidates(spark, sf_dir).select(
+        "row", "qnode", "n_ctx_props", "n_ctx_matched",
+        F.col("context_score").alias("context_score_array"),
     )
 
 
@@ -517,7 +437,8 @@ def q_reconcile_response(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Parquet handoff dir for oracle-checking stages whose INPUT is a
-# non-SQL-expressible computation (the MLPs, the LOF survivor set): the
+# non-SQL-expressible computation (the LOF survivor set) or ends a long
+# score chain (the final-MLP scores of wikify_end_to_end): the
 # Spark query materializes the stage output here and BOTH engines read the
 # same file, so the downstream logic is hash-checked exactly. Keyed by a
 # TWO-table fingerprint (part + lineitem row counts) — the oracle SQL is
@@ -541,48 +462,12 @@ def _handoff(spark: SparkSession, sf_dir: str, stage: str) -> tuple[str, list]:
 
 def q_pseudo_gt_mlp_anchor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """create-pseudo-gt anchored on the MLP PREDICTION exactly as the
-    reference does (wikifier.py:184-186) — oracle-checked: the prediction
-    is materialized to parquet, DuckDB reads the same file, and the
-    per-mean boolean (exact integer-micros comparison) is verified
-    hash-exact. Removes the pgr_rts-proxy caveat on the checked chain."""
-    f = featured_candidates(spark, sf_dir)
-    path, fp_cols = _handoff(spark, sf_dir, "pseudo_gt_pred")
-    pred = ranker.predict_using_model(
-        f,
-        ranker.PSEUDO_GT_FEATURES,
-        ranker.pseudo_gt_weights(),
-        ranker.PSEUDO_GT_DATA_MIN,
-        ranker.PSEUDO_GT_DATA_MAX,
-        "pseudo_gt_prediction",
+    reference does (wikifier.py:184-186): the chain's pseudo_gt. The
+    oracle recomputes the calibrated MLP in SQL and checks the per-mean
+    boolean (exact integer-micros comparison) hash-exact."""
+    return featured_candidates(spark, sf_dir).select(
+        "row", "qnode", F.col("pseudo_gt").alias("pseudo_gt_mlp")
     )
-    pred = pred.select(
-        "row",
-        "qnode",
-        F.floor(F.col("pseudo_gt_prediction") * 1e6 + F.lit(0.5))
-        .cast("long")
-        .alias("pred_micro"),
-        *fp_cols,
-    )
-    pred.write.mode("overwrite").parquet(path)
-    back = spark.read.parquet(path).drop("n_part", "n_li")
-    base = f.select("row", "qnode", "smc_class_score").join(back, ["row", "qnode"])
-    out = features.create_pseudo_gt(
-        base, "pred_micro", "smc_class_score", out="pseudo_gt_mlp", integral=True
-    )
-    return out.select("row", "qnode", "pseudo_gt_mlp")
-
-
-def q_ranker_pseudo_gt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    f = featured_candidates(spark, sf_dir)
-    scored = ranker.predict_using_model(
-        f,
-        ranker.PSEUDO_GT_FEATURES,
-        ranker.pseudo_gt_weights(),
-        ranker.PSEUDO_GT_DATA_MIN,
-        ranker.PSEUDO_GT_DATA_MAX,
-        "pseudo_gt_prediction",
-    )
-    return scored.select("row", "qnode", "pseudo_gt_prediction")
 
 
 def q_ranker_siamese(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -641,117 +526,30 @@ def q_match_rule(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_wikify_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full reference pipeline: candidates → features → pseudo-GT MLP →
-    pseudo-gt anchors (on the MLP PREDICTION, wikifier.py:184-186 — not
-    the oracle-proxy pgr_rts anchoring the checked feature chain uses) →
-    re-anchored centroid + pgt tf-idf → final 10-feature MLP → top-1
-    links + match rule.
+    """Full reference pipeline: candidates → feature chain (pseudo-GT
+    anchored on its MLP, wikifier.py:184-186) → final 10-feature MLP →
+    top-1 links + match rule.
 
-    ORACLE-CHECKED end-to-end via the parquet score handoff (same pattern
-    as q_pseudo_gt_mlp_anchor): the final MLP scores — the only
-    non-ANSI-SQL-expressible stage — are materialized to the shared
-    handoff file, BOTH engines read it, and the whole output tail (top-1
-    window, deterministic tie-break, >0.95 ∧ rank-1 match rule) is
-    hash-verified exactly. The MLP numerics themselves stay pinned by
-    ranker pytest (bit-exact vs numpy)."""
-    f = featured_candidates(spark, sf_dir)
-    idx = entity_index(spark, sf_dir)
-    idx_rows = index_rows(spark, sf_dir)
-    # r06 tail restructure (guide §2.3 "project early"): every pseudo-GT-
-    # anchored aggregate needs only (qnode, pseudo_gt), so the per-run
-    # re-anchoring runs on a NARROW projection — MLP over the 9 feature
-    # columns, per-run mean threshold, one narrow checkpoint — and the
-    # per-qnode centroid/tf-idf SCORE TABLES are derived from it. The
-    # wide 2M-row table is then assembled exactly ONCE (two qnode-keyed
-    # broadcast joins + final MLP + handoff write). The previous shape
-    # materialized the wide table twice (two barriers) and
-    # re-scanned it per aggregate — the measured bulk of the 13.5s/run
-    # sf1.0 tail. Anchored values and join-backs are expression-identical
-    # (centroid_scores_table / tfidf_scores_table are the factored-out
-    # bodies of the original operators).
-    nf = f.select("row", "qnode", *ranker.PSEUDO_GT_FEATURES)
-    nf = ranker.predict_using_model(
-        nf,
-        ranker.PSEUDO_GT_FEATURES,
-        ranker.pseudo_gt_weights(),
-        ranker.PSEUDO_GT_DATA_MIN,
-        ranker.PSEUDO_GT_DATA_MAX,
-        "pseudo_gt_prediction",
-    )
-    # reference-true anchoring: rebuild the pseudo-GT-downstream features
-    # from the MLP prediction threshold (row multiplicity preserved — the
-    # anchor aggregates count candidate ROWS per qnode)
-    nf = features.create_pseudo_gt(nf, "pseudo_gt_prediction", "smc_class_score")
-    # both downstream score tables need only per-qnode anchor-row counts
-    # and the distinct-qnode set — ONE aggregate, checkpointed at ~|entity|
-    # rows, fed through the operators' existing weighted path (sum of
-    # pseudo_gt == count of anchor rows; _anchored row excluded exactly
-    # when the qnode had no anchor rows). The previous shape checkpointed
-    # the 2M-row (qnode, pseudo_gt) table and re-aggregated it in each
-    # score table.
-    stats = barrier(
-        nf.groupBy("qnode")
-        .agg(F.sum("pseudo_gt").alias("_aw"))
-        .withColumn("_anchored", (F.col("_aw") > 0).cast("int"))
-    )
-    # stats is one row per qnode by construction — the score tables' own
-    # distinct / per-qnode re-aggregation are identity exchanges on it,
-    # skipped via pre_aggregated (guide §2.4)
-    cent = features.centroid_scores_table(
-        stats, idx.select("qnode", "embedding"),
-        anchor_col="_anchored", weight_col="_aw", dim_rows=idx_rows,
-        pre_aggregated=True,
-    )
-    tfs = features.tfidf_scores_table(
-        stats,
-        [
-            (class_key_dim(spark, sf_dir).select("qnode", "key"),
-             "pgt_class_count_tf_idf_score"),
-            (property_key_dim(spark, sf_dir).select("qnode", "key"),
-             "pgt_property_count_tf_idf_score"),
-        ],
-        "_anchored",
-        weight_col="_aw",
-        dim_rows=idx_rows,
-        pre_aggregated=True,
-    )
-    from .plans.skew import size_aware_broadcast
-
-    # project the wide table to exactly the columns the final MLP + output
-    # need BEFORE the join-backs (guide §2.3 project early: the dropped
-    # ~10 feature/context columns otherwise ride through both joins and
-    # the fills), and attach BOTH entity-scale score tables in ONE
-    # broadcast join (full-outer merge on qnode first — each is ≤ one row
-    # per qnode, so the merge is exact and one broadcast exchange + one
-    # probe pass replace two)
-    g = f.select(
-        "row", "label_clean", "qnode", "kg_label", "retrieval_score",
-        "monge_elkan", "monge_elkan_aliases", "jaro_winkler", "levenshtein",
-        "singleton", "context_score_3", "num_occurences",
-    )
-    scores = cent.join(tfs, "qnode", "full")
-    g = g.join(size_aware_broadcast(scores, idx_rows), "qnode", "left").na.fill(
-        {"pgt_centroid_score": 0.0,
-         "pgt_class_count_tf_idf_score": 0.0,
-         "pgt_property_count_tf_idf_score": 0.0}
-    )
+    ORACLE-CHECKED end-to-end via the parquet score handoff: the final MLP
+    scores are materialized to the shared handoff file, BOTH engines read
+    it, and the whole output tail (top-1 window, deterministic tie-break,
+    >0.95 ∧ rank-1 match rule) is hash-verified exactly. The MLP numerics
+    themselves are oracle-checked by ranker_siamese_mlp."""
     g = ranker.predict_using_model(
-        g,
+        featured_candidates(spark, sf_dir),
         ranker.FINAL_FEATURES,
         ranker.final_ranker_weights(),
         ranker.FINAL_DATA_MIN,
         ranker.FINAL_DATA_MAX,
         "siamese_prediction",
     )
-    # score handoff: materialize the MLP output; downstream top-k + match
-    # rule run off the SAME file in both engines (hash-exact oracle).
-    # retrieval_score rides along because it is get_kg_links' tie-break.
+    # score handoff: downstream top-k + match rule run off the SAME file in
+    # both engines. retrieval_score rides along as get_kg_links' tie-break.
     path, fp_cols = _handoff(spark, sf_dir, "siamese_pred")
-    scored = g.select(
+    g.select(
         "row", "label_clean", "qnode", "kg_label", "retrieval_score",
         "siamese_prediction", *fp_cols,
-    )
-    scored.write.mode("overwrite").parquet(path)
+    ).write.mode("overwrite").parquet(path)
     back = spark.read.parquet(path).drop("n_part", "n_li")
     links = topk.get_kg_links(back, k=1, score_col="siamese_prediction")
     links = topk.apply_match_rule(links)
@@ -780,11 +578,15 @@ def q_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_triples_emit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Links → (subj,pred,obj,part) triples: provenance + P31 typing."""
+    from .plans.skew import size_aware_broadcast
     from .triples import NUM_PARTS
 
     f = featured_candidates(spark, sf_dir)
-    links = topk.get_kg_links(f, k=1, score_col="retrieval_score").select(
-        "row", "qnode", "class"
+    cls = entity_index(spark, sf_dir).select("qnode", "class")
+    links = (
+        topk.get_kg_links(f, k=1, score_col="retrieval_score")
+        .join(size_aware_broadcast(cls, index_rows(spark, sf_dir)), "qnode")
+        .select("row", "qnode", "class")
     )
     mentioned = links.select(
         F.col("qnode").alias("subj"),
@@ -958,14 +760,12 @@ QUERIES: dict[str, QueryFn] = {
         "label_clean", "kg_label", "monge_elkan", "monge_elkan_aliases",
         "jaro_winkler", "levenshtein",
     ),
-    # singleton/hc + mosaic num_char/num_tokens (same chain row)
     "features_singleton_hc": _feature_query(
-        "singleton", "best_str_sim", "ignore_candidate", "num_char", "num_tokens"
+        "singleton", "best_str_sim", "ignore_candidate"
     ),
-    # fixed-triple context match + the --use-relevant-properties second pass
+    # property-array context match + the --use-relevant-properties pass
     "features_context_match": _feature_query(
-        "brand_match", "class_match", "size_match", "context_score",
-        "context_score_3",
+        "n_ctx_props", "n_ctx_matched", "context_score", "context_score_3"
     ),
     "features_context_match_typed": q_context_match_typed,
     "features_context_match_array": q_context_match_array,
@@ -979,7 +779,7 @@ QUERIES: dict[str, QueryFn] = {
     "features_pgt_tfidf_map": _feature_query(
         "pgt_class_count_tf_idf_score", "pgt_property_count_tf_idf_score"
     ),
-    "ranker_pseudo_gt_mlp": q_ranker_pseudo_gt,
+    "ranker_pseudo_gt_mlp": _feature_query("pseudo_gt_prediction"),
     "ranker_siamese_mlp": q_ranker_siamese,
     "kg_links_top3": q_kg_links_top3,
     "join_back_top1": q_join_back_top1,

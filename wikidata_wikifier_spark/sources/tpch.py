@@ -45,13 +45,3 @@ def table_rows(spark: SparkSession, sf_dir: str, name: str) -> int:
     if key not in _ROWS_CACHE:
         _ROWS_CACHE[key] = load_table(spark, sf_dir, name).count()
     return _ROWS_CACHE[key]
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view so spark.sql() surfaces work."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
