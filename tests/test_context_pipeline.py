@@ -130,9 +130,9 @@ def test_context_breaks_label_tie(spark, ambiguous):
 
 def test_without_context_tiebreak_wins(spark, ambiguous):
     source, index = ambiguous
-    # same index minus the context column → use_context off → plain
-    # deterministic tie-break (qnode asc) picks Q900, proving the flip in
-    # test_context_breaks_label_tie came from the context feature
+    # same index minus the context column → every context feature scores
+    # 0 → plain deterministic tie-break (qnode asc) picks Q900, proving the
+    # flip in test_context_breaks_label_tie came from the context feature
     links = wikify(source, index.drop("context_arr"), k=1)
     top = (
         links.where(F.col("label_clean") == "cold widget")

@@ -4,6 +4,7 @@ fail here, not crash a traced run."""
 
 from __future__ import annotations
 
+import ast
 import importlib.util
 import os
 
@@ -28,3 +29,22 @@ def test_link_tracer_targets_exist():
     tracer = _StubTracer()
     run.install_link_tracer(tracer)
     assert "wikidata_wikifier_spark.operators.candidates.label_candidates" in tracer.wrapped
+
+
+def test_dedup_entry_points_exist():
+    """run.py calls the dedup operators by name inside run_dedup; each
+    `dedup.<name>` it reads must exist on operators.dedup."""
+    from wikidata_wikifier_spark.operators import dedup
+
+    with open(RUN_PY) as f:
+        tree = ast.parse(f.read())
+    names = {
+        node.attr
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Attribute)
+        and isinstance(node.value, ast.Name)
+        and node.value.id == "dedup"
+    }
+    assert {"exact_duplicates", "minhash_lsh_pairs", "simhash_pairs", "ngram_jaccard_pairs"} <= names
+    for name in names:
+        assert callable(getattr(dedup, name, None)), f"operators.dedup.{name}"

@@ -23,7 +23,8 @@ label_clean, so two mentions with the same cleaned label get identical
 candidate lists in identical order. Each strategy is one builder over the
 materialized distinct-label set and alias index (`retrieval_inputs`):
 `exact_label_matches`, `ngram_label_matches` and `string_label_matches`
-(trigram and fuzzy, over one shared scored string-pair table).
+(trigram and fuzzy, over one shared scored string-pair table, whose
+pairs come from the set-similarity join in setsim.py).
 `cap_per_label` applies the result cap. `label_candidates` composes all
 four for the pipeline; the per-strategy board queries run one builder
 each and fan its capped table out to mentions, so the per-strategy DuckDB
@@ -46,6 +47,7 @@ from ..functions.hashing import char_ngrams, edge_ngrams
 from ..functions.strings import clean_label, levenshtein_similarity
 from ..plans.barrier import barrier
 from ..plans.skew import size_aware_broadcast
+from . import setsim
 
 EDGE_MIN, EDGE_MAX = 3, 10
 TRIGRAM_JACCARD_MIN = 0.5
@@ -61,14 +63,6 @@ STRING_STRATEGIES = {
 # entities at scale) drags its full entity list through every downstream
 # feature stage.
 TOP_N_PER_STRATEGY = 50
-# Candidate-pair generation uses PREFIX FILTERING (Chaudhuri et al. /
-# ppjoin family): order each string's grams by global document frequency
-# (rarest first) and join only on the first floor(n/2)+1 of them. For
-# Jaccard ≥ 0.5 this is RECALL-EXACT (J ≥ 0.5 ⇒ overlap ≥ 0.5·n_a ⇒ the
-# rarest-half prefixes must intersect) while head grams ("wid" in every
-# "widget" alias, O(df²) join fan-out) almost never appear in a prefix.
-# The fuzzy strategy reuses the same candidate pairs — heuristic recall
-# there, like Elasticsearch's own fuzzy retrieval.
 
 
 def _hint_smaller(
@@ -200,14 +194,13 @@ def ngram_label_matches(r: RetrievalInputs) -> DataFrame:
     )
 
 
-def _prefix(df: DataFrame, part_cols: list[str], n_col: str) -> DataFrame:
-    """Keep each string's floor(n/2)+1 rarest grams (order: gdf, gram)."""
-    w = Window.partitionBy(*part_cols).orderBy("gdf", "gram")
-    limit = F.floor(F.col(n_col) / 2) + 1
+def _trigram_sets(strings: DataFrame) -> DataFrame:
+    """(id, g, n) set table of distinct char-3-gram sets, one per string."""
     return (
-        df.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= limit)
-        .drop("rk", "gdf")
+        strings.distinct()
+        .withColumn("g", F.array_distinct(char_ngrams(F.col("id"), 3)))
+        .withColumn("n", F.size("g"))
+        .where(F.col("n") > 0)
     )
 
 
@@ -220,61 +213,31 @@ def _scored_string_pairs(r: RetrievalInputs) -> DataFrame:
     corpus — at 100× rows the distinct-label set barely moves. Verifying
     per (mention, alias) row instead explodes with entity duplication
     (measured: 33.7M pairs at sf0.1 vs ~100k distinct string pairs).
-    The per-qnode fan-out happens only AFTER the similarity threshold."""
-    # a_str is referenced 3x (gram_df, prefix explode, verify join-back)
+    The per-qnode fan-out happens only AFTER the similarity threshold.
+
+    Pairs are setsim.py's trigram prefix collisions, with no positional
+    filter: fuzzy scores the same pairs (heuristic recall, like ES fuzzy)."""
+    # a_sets is referenced 3x (gram df, prefix explode, verify join-back)
     # over a distinct exchange + interpreted char-ngram lambda per alias
     # (measured A/B: 1.7-1.8 -> 1.3-1.4s noop at the 10x replica)
-    a_str = barrier(
-        r.aliases.select("alias_norm")
-        .distinct()
-        .withColumn("ag", F.array_distinct(char_ngrams(F.col("alias_norm"), 3)))
-        .withColumn("n_a", F.size("ag"))
-        .where(F.col("n_a") > 0)
-    )
-    m_str = (
-        r.labels.select("label_clean")
-        .distinct()
-        .withColumn("mg", F.array_distinct(char_ngrams(F.col("label_clean"), 3)))
-        .withColumn("n_m", F.size("mg"))
-        .where(F.col("n_m") > 0)
-    )
-    gram_df = a_str.select(F.explode("ag").alias("gram")).groupBy("gram").agg(
-        F.count("*").alias("gdf")
-    )
-    # gram_df has one row per distinct trigram — tiny relative to the
-    # alias table (bounded by alphabet³ per language), safe to hint small
-    a_grams = a_str.select("alias_norm", "n_a", F.explode("ag").alias("gram")).join(
-        size_aware_broadcast(gram_df, r.alias_rows), "gram"
-    )
-    a_pre = _prefix(a_grams, ["alias_norm"], "n_a")
-    m_grams = (
-        m_str.select("label_clean", "n_m", F.explode("mg").alias("gram"))
-        .join(size_aware_broadcast(gram_df, r.alias_rows), "gram", "left")
-        .na.fill({"gdf": 0})
-    )
-    m_pre = _prefix(m_grams, ["label_clean"], "n_m")
-
+    a_sets = barrier(_trigram_sets(r.aliases.select(F.col("alias_norm").alias("id"))))
+    m_sets = _trigram_sets(r.labels.select(F.col("label_clean").alias("id")))
+    # gram df (≤ alphabet³ rows) and alias prefixes: hinted by the alias count
     pairs = (
-        m_pre.join(size_aware_broadcast(a_pre, r.alias_rows), "gram", "inner")
-        .select("label_clean", "alias_norm")
+        setsim.prefix_pairs(m_sets, a_sets, TRIGRAM_JACCARD_MIN, rows=r.alias_rows)
+        .select("a", "b")
         .distinct()
     )
     return (
-        pairs.join(
-            size_aware_broadcast(m_str.select("label_clean", "mg", "n_m"), r.label_rows),
-            "label_clean",
+        setsim.with_jaccard(
+            pairs,
+            size_aware_broadcast(m_sets, r.label_rows),
+            size_aware_broadcast(a_sets, r.alias_rows),
         )
-        .join(
-            size_aware_broadcast(a_str.select("alias_norm", "ag", "n_a"), r.alias_rows),
-            "alias_norm",
+        .select(
+            F.col("a").alias("label_clean"), F.col("b").alias("alias_norm"), "jaccard",
+            levenshtein_similarity(F.col("a"), F.col("b")).alias("lev_sim"),
         )
-        .withColumn("overlap", F.size(F.array_intersect("mg", "ag")))
-        .withColumn(
-            "jaccard",
-            F.col("overlap") / (F.col("n_m") + F.col("n_a") - F.col("overlap")),
-        )
-        .withColumn("lev_sim", levenshtein_similarity(F.col("label_clean"), F.col("alias_norm")))
-        .select("label_clean", "alias_norm", "jaccard", "lev_sim")
     )
 
 

@@ -14,7 +14,10 @@ Scale design:
 - SimHash: 60-bit signature, 6 bands of 10 bits; pigeonhole guarantees
   hamming≤3 pairs share ≥1 band, so the self-join is band-bucketed,
   never all-pairs.
-- n-gram Jaccard: gram-inverted-index join blocked by lang.
+- n-gram Jaccard: gram-inverted-index join blocked by lang, prefix- and
+  positional-filtered; it and the MinHash verify run on the
+  set-similarity join in setsim.py, the one copy of the gram order, the
+  filter bounds and the Jaccard verify.
 - embedding cosine: blocked by cluster label (coarse quantization) —
   the IVF pattern: compare only within the same coarse cell.
 """
@@ -27,7 +30,8 @@ from pyspark.sql import functions as F
 from ..functions.hashing import affine_hash_family, md5_long
 from ..functions.vectors import UNROLL_MAX_DIM, cosine, cosine_fixed, norm_fixed
 from ..plans.barrier import barrier
-from ..plans.skew import size_aware_broadcast
+from ..plans.skew import spread
+from . import setsim
 
 MINHASH_K = 16
 MINHASH_BANDS = 4  # 4 rows per band
@@ -43,18 +47,6 @@ SIMHASH_MAX_HAMMING = 3
 NGRAM_N = 4
 NGRAM_JACCARD_MIN = 0.8
 COSINE_DUP_MIN = 0.4  # synthetic clusters are loose; tune per-corpus
-
-
-def _spread(df: DataFrame, col: str) -> DataFrame:
-    """Explicit-width repartition before per-row-heavy compute.
-
-    Single-file inputs arrive as one partition and AQE would coalesce a
-    column-only repartition of a few MB right back to one task — but the
-    DOWNSTREAM cost (shingle explode × K hashes) is orders of magnitude
-    larger than the shuffle bytes AQE sees. An explicit partition count is
-    preserved by AQE and spreads the compute."""
-    n = max(df.sparkSession.sparkContext.defaultParallelism * 2, 16)
-    return df.repartition(n, F.col(col))
 
 
 def norm_text(col: Column) -> Column:
@@ -189,7 +181,7 @@ def minhash_lsh_pairs(
     explode input was already array_distinct'ed.
     """
     sets = barrier(
-        _spread(docs, id_col)
+        spread(docs, id_col)
         .select(F.col(id_col).alias("id"), word_tokens(F.col(text_col)).alias("t"))
         .select("id", distinct_shingles3(F.col("t")).alias("g"))
         .withColumn("n", F.size("g"))
@@ -222,16 +214,8 @@ def minhash_lsh_pairs(
         .select("a", "b")
         .distinct()
     )
-
-    sa = sets.select(F.col("id").alias("a"), F.col("g").alias("ga"), F.col("n").alias("na"))
-    sb = sets.select(F.col("id").alias("b"), F.col("g").alias("gb"), F.col("n").alias("nb"))
     return (
-        cand.join(sa, "a")
-        .join(sb, "b")
-        .withColumn("o", F.size(F.array_intersect("ga", "gb")))
-        .withColumn(
-            "jaccard", F.round(F.col("o") / (F.col("na") + F.col("nb") - F.col("o")), 6)
-        )
+        setsim.with_jaccard(cand, sets, sets)
         .where(F.col("jaccard") >= MINHASH_VERIFY_JACCARD)
         .select("a", "b", "jaccard")
     )
@@ -241,7 +225,7 @@ def minhash_lsh_pairs(
 
 def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """60-bit SimHash per doc from word-token hashes (native bit ops)."""
-    toks = _spread(docs, id_col).select(
+    toks = spread(docs, id_col).select(
         id_col, F.explode(F.array_distinct(word_tokens(F.col(text_col)))).alias("t")
     ).withColumn("h", md5_long(F.col("t")))
     bit_sums = toks.groupBy(id_col).agg(
@@ -303,18 +287,18 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """Char-4-gram Jaccard ≥ 0.8 pairs, blocked by `block_col` (lang).
 
-    Prefix-filtered generate-then-verify (ppjoin-style): each doc joins
-    only on its floor(n/5)+1 RAREST grams (global df order) — for
-    J ≥ 0.8, overlap ≥ 0.8·n per side, so the rarest-fifth prefixes of a
-    true pair must intersect: RECALL-EXACT with the O(df²) head-gram
-    fan-out gone. Exact Jaccard is then verified on the candidates' full
-    gram sets."""
+    A self-join of the set-similarity join (setsim.py), recall-exact:
+    each doc joins only on its rarest-fifth prefix (gram df within the
+    block), collisions pass the positional filter before the distinct
+    (measured 2.45M collision pairs at sf0.1 without it, all feeding the
+    array-intersect verify), and the 6-dp Jaccard is verified on the
+    candidates' full gram sets."""
     # r06: the gram-set table is Arrow-vectorized (distinct_char_ngrams —
     # the interpreted per-gram transform was 16.4s of the sf0.1 pass) and
-    # behind a barrier: it is referenced by the explode AND both verify
-    # sides, which re-ran the gram build 3x
+    # behind a barrier: the gram df, the prefix and both verify sides
+    # read it, which re-ran the gram build per reference
     sets = barrier(
-        _spread(
+        spread(
             docs.select(
                 F.col(id_col).alias("id"),
                 F.col(block_col).alias("blk"),
@@ -323,67 +307,17 @@ def ngram_jaccard_pairs(
             "id",
         )
     )
-    g = sets.select("id", "blk", "n", F.explode("g").alias("s"))
-    df_ = g.groupBy("blk", "s").agg(F.count("*").alias("gdf"))
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("id").orderBy("gdf", "s")
-    # gram document frequencies: usually tiny (distinct grams per lang
-    # block), but NOT guaranteed small at 100 TB — size_aware_broadcast
-    # honors the session autoBroadcastJoinThreshold=-1 escape hatch and
-    # lets AQE demote to a shuffle join instead of OOMing the driver.
-    # pre is behind a barrier: both sides of the candidate self-join read
-    # it, and its window otherwise re-executes per side (measured
-    # 5.2s/pass).
-    pre = barrier(
-        g.join(size_aware_broadcast(df_, None), ["blk", "s"])
-        .withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= F.floor(F.col("n") / 5) + 1)
-        .select("id", "blk", "s", "n", "rk")
-    )
-    # ppjoin POSITIONAL filter (exact): rk is the gram's 1-based position
-    # in the doc's full (gdf, s)-sorted gram list, so the overlap of any
-    # pair colliding on this gram is ≤ min(na-rka+1, nb-rkb+1) — every
-    # common gram sorts at-or-after the colliding one on both sides. A
-    # true pair (J ≥ t ⇒ o ≥ t/(1+t)·(na+nb)) always passes on its FIRST
-    # common gram, so filtering collision rows before the distinct keeps
-    # recall exact while cutting the candidate exchange (measured 2.45M →
-    # far fewer pairs feeding the 16.8s array-intersect verify at sf0.1).
-    # ε=0.5 keeps integer-boundary collisions instead of trusting float
-    # rounding — extra keeps are verified away, prunes are provably safe.
     t = NGRAM_JACCARD_MIN
-    min_rem = F.least(
-        F.col("na") - F.col("rka") + 1, F.col("nb") - F.col("rkb") + 1
-    )
     cand = (
-        pre.select(
-            F.col("id").alias("a"), "blk", "s",
-            F.col("n").alias("na"), F.col("rk").alias("rka"),
-        )
-        .join(
-            pre.select(
-                F.col("id").alias("b"), "blk", "s",
-                F.col("n").alias("nb"), F.col("rk").alias("rkb"),
-            ),
-            ["blk", "s"],
-        )
+        setsim.prefix_pairs(sets, sets, t, on=("blk",))
         .where(F.col("a") < F.col("b"))
-        .where(
-            (1.0 + t) * min_rem >= t * (F.col("na") + F.col("nb")) - F.lit(0.5)
-        )
+        .where(setsim.could_reach(t))
         .select("a", "b")
         .distinct()
     )
-    sa = sets.select(F.col("id").alias("a"), F.col("g").alias("ga"), F.col("n").alias("na"))
-    sb = sets.select(F.col("id").alias("b"), F.col("g").alias("gb"), F.col("n").alias("nb"))
     return (
-        cand.join(sa, "a")
-        .join(sb, "b")
-        .withColumn("o", F.size(F.array_intersect("ga", "gb")))
-        .withColumn(
-            "jaccard", F.round(F.col("o") / (F.col("na") + F.col("nb") - F.col("o")), 6)
-        )
-        .where(F.col("jaccard") >= NGRAM_JACCARD_MIN)
+        setsim.with_jaccard(cand, sets, sets)
+        .where(F.col("jaccard") >= t)
         .select("a", "b", "jaccard")
     )
 
@@ -423,7 +357,7 @@ def embedding_cosine_pairs(
     8. Mirrored exactly in the DuckDB oracle."""
     from .similarity import bucket_from_dots, plane_dots_fold
 
-    v = _spread(
+    v = spread(
         embs.select(
             F.col(id_col).alias("id"), F.col(block_col).alias("blk"), F.col(vec_col).alias("v")
         ),

@@ -29,20 +29,9 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import UNROLL_MAX_DIM, cosine, cosine_fixed, norm_fixed
+from ..plans.skew import spread
 
 N_PLANES = 8
-
-
-def _spread(df: DataFrame, col: str) -> DataFrame:
-    """Hash-repartition before per-row-heavy pair compute (same rationale
-    as dedup._spread): a few-MB parquet corpus arrives as 1-2 scan
-    partitions, which serializes the N·Q cosine work onto 1-2 cores —
-    measured as the dominant cost of ann_cosine_topk at sf1.0 (112s on 2
-    tasks). An explicit scale-adaptive width (2× defaultParallelism,
-    deterministic hash on the id column — never round-robin) survives AQE
-    coalescing and costs one narrow shuffle of the corpus ids+vectors."""
-    n = max(df.sparkSession.sparkContext.defaultParallelism * 2, 16)
-    return df.repartition(n, F.col(col))
 
 
 def brute_force_topk(
@@ -60,7 +49,7 @@ def brute_force_topk(
     codegen'd cosine with per-row (not per-pair) norms; output identical.
     """
     q = queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("qv"))
-    c = _spread(embs.select(F.col(id_col).alias("n_id"), F.col(vec_col).alias("nv")), "n_id")
+    c = spread(embs.select(F.col(id_col).alias("n_id"), F.col(vec_col).alias("nv")), "n_id")
     if dim and dim <= UNROLL_MAX_DIM:
         q = q.withColumn("_qn", norm_fixed("qv", dim))
         c = c.withColumn("_nn", norm_fixed("nv", dim))
@@ -134,7 +123,7 @@ def _sql_plane_dot(vec: str, p: int, dim: int) -> str:
 # chain is ~10KB of source; a full unrolled 8-plane signature (512 terms)
 # compiles when it is the only heavy expression in its codegen span but
 # overflows when it shares a span with the pair join + cosine — which is
-# why lsh_topk computes the bucket BEFORE the _spread exchange (the
+# why lsh_topk computes the bucket BEFORE the spread exchange (the
 # exchange is the codegen-span boundary). Budget for a fully-unrolled
 # signature; anything larger takes the single-pass fold below.
 UNROLL_BUCKET_MAX_TERMS = 512
@@ -277,12 +266,12 @@ def lsh_topk(
     Recall < 1 remains possible by construction (that's the
     approximation); the oracle reproduces the same probe set exactly.
     probe_radius=0 restores single-probe behavior."""
-    # bucket computed BEFORE the _spread exchange: the exchange is a
+    # bucket computed BEFORE the spread exchange: the exchange is a
     # codegen-span boundary, so the 512-term unrolled signature compiles
     # in the scan span while the join+cosine span stays small (sharing
     # one span overflowed the 64KB generated-method limit and dropped the
     # whole stage out of codegen)
-    c = _spread(
+    c = spread(
         embs.select(
             F.col(id_col).alias("n_id"),
             F.col(vec_col).alias("nv"),

@@ -144,7 +144,7 @@ trigram_m AS MATERIALIZED (
            'trigram'            AS method,
            round(max(jaccard), 6) AS retrieval_score
     FROM cm JOIN sscores USING (label_clean) JOIN alias_idx USING (alias_norm)
-    WHERE jaccard >= 0.5
+    WHERE round(jaccard, 6) >= 0.5
     GROUP BY 1, 2, 3
     QUALIFY row_number() OVER (PARTITION BY row ORDER BY retrieval_score DESC, qnode ASC) <= 50
 ),

@@ -39,6 +39,22 @@ def salted_join(
     return out.drop("_salt")
 
 
+def spread(df: DataFrame, col: str) -> DataFrame:
+    """Hash-repartition `df` on `col` to 2× defaultParallelism (at least
+    16) partitions, before per-row-heavy compute.
+
+    A few-MB input arrives as 1-2 scan partitions, and AQE coalesces a
+    repartition by column alone right back to 1-2 tasks: it sees only the
+    shuffle bytes, not the downstream cost (shingle explode × K hashes,
+    N·Q cosines, the feature chain), which is orders of magnitude larger (ann_cosine_topk at sf1.0
+    ran 112 s on 2 tasks).
+    An explicit partition count survives AQE coalescing and spreads that
+    compute over every core. The hash on a column (never round-robin)
+    keeps the layout deterministic across task retries."""
+    n = max(df.sparkSession.sparkContext.defaultParallelism * 2, 16)
+    return df.repartition(n, F.col(col))
+
+
 # Above this many rows the exploded index-side tables (aliases, edge-ngram
 # prefixes, gram prefixes) stop fitting a driver/executor broadcast at the
 # real target (Wikidata: ~100M labels × ~8 grams each is tens of GB) — the

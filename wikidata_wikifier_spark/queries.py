@@ -21,6 +21,7 @@ from .operators.canonicalize import canonicalize, clean
 from .operators.linking_fixture import class_key_dim, cleaned_mentions, entity_index
 from .pipeline import feature_chain
 from .plans.barrier import barrier
+from .plans.skew import spread
 from .sources.tpch import load_table, table_rows
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -184,9 +185,8 @@ def featured_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).join(cleaned_mentions(spark, sf_dir).select("row", "context"), "row")
     # spread before the feature stages: upstream AQE coalesces the capped
     # candidate table to 1-2 partitions, which would serialize them
-    n_parts = max(spark.sparkContext.defaultParallelism * 2, 16)
     f = feature_chain(
-        c.repartition(n_parts, F.col("row")),
+        spread(c, "row"),
         entity_index(spark, sf_dir),
         index_rows(spark, sf_dir),
         cell_col="row",
