@@ -23,6 +23,11 @@ Usage:
     python bench.py --runs 1         # old single-shot semantics
     python bench.py --cpus 8         # override parallelism (scaling runs)
     python bench.py --all            # every registered query
+    python bench.py --plans DIR      # also write DIR/<query>.txt, the
+                                     # explain("formatted") of each query
+    python bench.py --noop           # time the noop sink instead of
+                                     # .count(): computation without result
+                                     # collection (rows_out is then 0)
 """
 
 from __future__ import annotations
@@ -78,6 +83,8 @@ def main() -> None:
     ap.add_argument("--all", action="store_true")
     ap.add_argument("--queries", nargs="*", default=None)
     ap.add_argument("--runs", type=int, default=3)
+    ap.add_argument("--plans", default=None)
+    ap.add_argument("--noop", action="store_true")
     args = ap.parse_args()
 
     if args.cpus:
@@ -94,9 +101,26 @@ def main() -> None:
     spark = get_spark(app_name="wikifier-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
+    def run(name: str) -> int:
+        df = QUERIES[name](spark, args.sf_dir)
+        if args.noop:
+            df.write.format("noop").mode("overwrite").save()
+            return 0
+        return df.count()
+
+    if args.plans:
+        os.makedirs(args.plans, exist_ok=True)
+        for name in names:
+            df = QUERIES[name](spark, args.sf_dir)
+            plan = df._sc._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted"
+            )
+            with open(os.path.join(args.plans, f"{name}.txt"), "w") as fh:
+                fh.write(plan)
+
     # warm the JVM + parquet footers once so per-query numbers measure the
     # query, not session startup
-    QUERIES[names[0]](spark, args.sf_dir).count()
+    run(names[0])
 
     timings: dict[str, float] = {}
     spread: dict[str, list[float]] = {}
@@ -108,7 +132,7 @@ def main() -> None:
         n = 0
         for _ in range(max(args.runs, 1)):
             t0 = time.perf_counter()
-            n = QUERIES[name](spark, args.sf_dir).count()
+            n = run(name)
             samples.append(time.perf_counter() - t0)
         med = statistics.median(samples)
         timings[name] = round(med, 3)

@@ -1,7 +1,8 @@
 """bench.py CLI contract: one JSON line on stdout with the fields the
 round driver consumes (value/queries/sf/...) plus the round-5 noise
-fields (median runs, spread, first-run sum, membw probe brackets). Runs
-two fast queries at sf0.001 so the whole test stays ~30 s on an idle
+fields (median runs, spread, first-run sum, membw probe brackets), and
+the --plans side output. Runs two fast queries at sf0.001 so the whole
+test stays ~30 s on an idle
 host — the timeout is sized for the LOADED host this box frequently is
 (membw probes have read 0.03 GB/s vs ~30 idle, a ~10× slowdown on
 everything), because a host-load flake here would mask real contract
@@ -17,12 +18,14 @@ import sys
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def test_bench_cli_json_contract():
+def test_bench_cli_json_contract(tmp_path):
+    plans = tmp_path / "plans"
     r = subprocess.run(
         [
             sys.executable, os.path.join(ROOT, "bench.py"),
             "--cpus", "4", "--sf-dir", "/root/testdata/sf0.001",
             "--runs", "2", "--queries", "dedup_exact", "events_sessionize",
+            "--plans", str(plans),
         ],
         capture_output=True, text=True, timeout=1200, cwd=ROOT,
     )
@@ -48,3 +51,9 @@ def test_bench_cli_json_contract():
     assert len(out["probe_gb_s"]) == 2
     for p in out["probe_gb_s"]:
         assert p is None or p > 0
+    # --plans: one explain("formatted") file per query
+    assert sorted(f.name for f in plans.iterdir()) == [
+        "dedup_exact.txt", "events_sessionize.txt",
+    ]
+    for f in plans.iterdir():
+        assert "Physical Plan" in f.read_text()

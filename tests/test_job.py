@@ -3,11 +3,44 @@ partitioned triples + manifest, resumable."""
 
 from __future__ import annotations
 
+import importlib.util
 import json
+import os
 import sys
 
 from wikidata_wikifier_spark import datagen
 from wikidata_wikifier_spark.job import main
+
+RUN_PY = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "kgbench", "run.py"
+)
+
+
+class _ReachTracer:
+    """Pass-through stand-in for kgbench's Tracer: each wrapped engine
+    function records that it was called, then runs unchanged."""
+
+    def __init__(self):
+        self.targets: list[str] = []
+        self.reached: set[str] = set()
+        self._patched: list = []
+
+    def wrap(self, module, attr, layer, after=None):
+        orig = getattr(module, attr)
+        name = f"{module.__name__}.{attr}"
+
+        def passthrough(*args, **kwargs):
+            self.reached.add(name)
+            return orig(*args, **kwargs)
+
+        self.targets.append(name)
+        self._patched.append((module, attr, orig))
+        setattr(module, attr, passthrough)
+
+    def unwrap(self):
+        for module, attr, orig in reversed(self._patched):
+            setattr(module, attr, orig)
+        self._patched.clear()
 
 
 def write_inputs(spark, tmp_path) -> list[str]:
@@ -28,7 +61,18 @@ def test_job_main(spark, tmp_path, capsys, monkeypatch):
         sys, "argv",
         ["job", *write_inputs(spark, tmp_path), "--out", out, "--resume"],
     )
-    main()
+    # the traced benchmark patches engine functions by module attribute:
+    # each one it wraps must be reached through that attribute by the job
+    spec = importlib.util.spec_from_file_location("kgbench_run", RUN_PY)
+    run = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(run)
+    tracer = _ReachTracer()
+    run.install_link_tracer(tracer)
+    try:
+        main()
+    finally:
+        tracer.unwrap()
+    assert set(tracer.targets) - tracer.reached == set()
     stats = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert stats["n_triples"] > 0
     got = spark.read.parquet(out + "/triples")

@@ -13,8 +13,9 @@ from wikidata_wikifier_spark.operators.features import (
     LOF_K,
     LOF_THRESHOLD,
     _lof_scores,
-    embedding_centroid_lof_score,
+    centroid_cosine_scores,
     embedding_centroid_score,
+    lof_surviving_anchors,
 )
 
 
@@ -36,7 +37,11 @@ def test_lof_centroid_excludes_outliers(spark):
     cands = idx.select(
         F.lit(0).alias("row"), "qnode", F.lit(1).alias("pseudo_gt")
     )
-    scored = embedding_centroid_lof_score(cands, emb_dim=emb_dim)
+    # the centroid-of-lof composition of queries.q_centroid_lof
+    surv = lof_surviving_anchors(cands, emb_dim=emb_dim)
+    scored = centroid_cosine_scores(
+        cands, surv.withColumn("w", F.lit(1)), emb_dim, "pgt_centroid_lof_score"
+    )
     plain = embedding_centroid_score(cands, emb_dim=emb_dim)
 
     ents = datagen.entity_rows(200)

@@ -198,104 +198,6 @@ def source_repos_df(
     return spark.createDataFrame(src, SOURCE_REPOS), gdf.dropDuplicates()
 
 
-def distributed_source_repos_df(
-    spark: SparkSession,
-    n_files: int,
-    n_entities: int = 200,
-    seed: int = 42,
-    n_repos: int | None = None,
-) -> DataFrame:
-    """Executor-side synthetic source-repo table for LARGE scaling runs.
-
-    The list-based datagen above materializes every row on the driver —
-    fine for golden fixtures (≤ a few hundred k rows), hopeless for the
-    millions-of-files inputs the scaling evidence needs. This variant
-    derives every field from spark.range(n_files) with native column
-    expressions (deterministic integer arithmetic, no RNG), so generation
-    is embarrassingly parallel, identical at any parallelism level, and
-    the same recipe would synthesize a 10^12-row table on a real cluster.
-
-    Shapes mirror source_repo_rows: one mega-repo holding ~10% of files
-    (skew), a head entity planted in every 4th file, 3 planted labels per
-    file, per-lang content that the detect_mentions regexes match, and an
-    empty-content row every 19th file.
-    """
-    from pyspark.sql import functions as F
-
-    n_repos = n_repos or max(40, n_files // 25)
-    ents = entity_rows(n_entities, seed)
-    labels = F.array(*[F.lit(e["label"]) for e in ents])
-    head = F.lit(ents[0]["label"])
-
-    df = spark.range(n_files).withColumn("fid", F.col("id"))
-    # mega-repo 0 gets every 10th file; the rest spread over n_repos
-    repo_id = F.when(F.col("fid") % 10 == 0, F.lit(0)).otherwise(
-        F.pmod(F.col("fid") * 2654435761 + seed, F.lit(n_repos))
-    )
-    lang_i = F.pmod(F.col("fid"), F.lit(4))
-    lang = F.element_at(F.array(*[F.lit(x) for x in LANGS]), (lang_i + 1).cast("int"))
-
-    def pick(k: int):
-        col = F.element_at(
-            labels, (F.pmod(F.col("fid") * (2 * k + 3) + k, F.lit(n_entities)) + 1).cast("int")
-        )
-        if k == 2:
-            return F.when(F.col("fid") % 4 == 0, head).otherwise(col)
-        return col
-
-    l0, l1, l2 = pick(0), pick(1), pick(2)
-    ident = lambda c: F.replace(c, F.lit(" "), F.lit("_"))
-
-    def py_def(c):
-        return F.concat(
-            F.lit("def make_"), ident(c), F.lit("(n):\n"),
-            F.lit('    """Build a '), c, F.lit(' instance."""\n'),
-            F.lit("    return '"), c, F.lit("'\n\n"),
-        )
-
-    def java_m(c):
-        camel = F.initcap(c)
-        return F.concat(
-            F.lit("  /** Returns the "), c, F.lit(". */\n"),
-            F.lit('  public String get'), F.replace(camel, F.lit(" "), F.lit("")),
-            F.lit('() { return "'), c, F.lit('"; }\n'),
-        )
-
-    def js_m(c):
-        return F.concat(
-            F.lit("/** fetch the "), c, F.lit(" */\nexport const "), ident(c),
-            F.lit(' = () => "'), c, F.lit('";\n'),
-        )
-
-    def md_m(c):
-        return F.concat(F.lit("This document describes the **"), c, F.lit("** component.\n"))
-
-    content = (
-        F.when(lang == "python", F.concat(
-            F.lit('"""Utilities for '), l0, F.lit('."""\n\nimport os\n\n'),
-            py_def(l0), py_def(l1), py_def(l2)))
-        .when(lang == "java", F.concat(
-            F.lit("/** Service for "), l0, F.lit(". */\npublic class Svc {\n"),
-            java_m(l0), java_m(l1), java_m(l2), F.lit("}\n")))
-        .when(lang == "js", F.concat(
-            F.lit("// module\n"), js_m(l0), js_m(l1), js_m(l2)))
-        .otherwise(F.concat(F.lit("# doc\n\n"), md_m(l0), md_m(l1), md_m(l2)))
-    )
-    content = F.when(F.col("fid") % 19 == 18, F.lit("")).otherwise(content)
-    ext = F.element_at(
-        F.array(F.lit("py"), F.lit("java"), F.lit("js"), F.lit("md")),
-        (lang_i + 1).cast("int"),
-    )
-    return df.select(
-        F.concat(F.lit("org"), (repo_id % 7).cast("string"), F.lit("/repo"),
-                 repo_id.cast("string")).alias("repo"),
-        F.concat(F.lit("src/file_"), F.col("fid").cast("string"), F.lit("."), ext).alias("path"),
-        F.md5(F.concat_ws("@", F.col("fid").cast("string"), F.lit(str(seed)))).alias("commit"),
-        lang.alias("lang"),
-        content.alias("content"),
-    )
-
-
 def alias_edges_df(spark: SparkSession, n_entities: int = 200) -> DataFrame:
     """sameAs edges between qnodes: chains, a cycle, singletons, and one
     large component (FIXTURES.md §6)."""

@@ -12,6 +12,10 @@ spark-submit --py-files on multi-executor clusters").
         --out     <output dir: triples/ + _manifest/> \\
         [--resume] [--k 1] [--checkpoint-dir <dir>]
 
+Each input is a catalog table name, or a parquet path when it contains a
+"/". The job runs pipeline.build_graph and prints the writer's stats
+(written_parts, skipped_parts, n_triples) as its last stdout line.
+
 On a cluster the session comes from spark-submit's conf (no master
 override here). --checkpoint-dir sets the session's checkpoint directory,
 which makes every materialization barrier (plans/barrier.py) a reliable
@@ -23,7 +27,11 @@ from __future__ import annotations
 import argparse
 import json
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+
+def _read(spark: SparkSession, name: str) -> DataFrame:
+    return spark.read.table(name) if "/" not in name else spark.read.parquet(name)
 
 
 def main() -> None:
@@ -47,38 +55,17 @@ def main() -> None:
     if args.checkpoint_dir:
         spark.sparkContext.setCheckpointDir(args.checkpoint_dir)
 
-    from .pipeline import canonicalize_links, wikify
-    from .plans.checkpoint import write_triples
-    from .triples import links_to_triples
+    from .pipeline import build_graph
 
-    source = (
-        spark.read.table(args.source)
-        if "/" not in args.source
-        else spark.read.parquet(args.source)
+    stats = build_graph(
+        _read(spark, args.source),
+        _read(spark, args.index),
+        args.out,
+        edges=_read(spark, args.edges) if args.edges else None,
+        k=args.k,
+        salt=args.salt,
+        resume=args.resume,
     )
-    index = (
-        spark.read.table(args.index)
-        if "/" not in args.index
-        else spark.read.parquet(args.index)
-    )
-
-    # ONE count job total for the size hints: wikify's label_candidates
-    # counts the alias index anyway (a real scan job, not metadata-free) and
-    # exposes it via the stats out-dict; the output tail's typing join
-    # reuses that number instead of re-scanning the ~100M-row index
-    # (size_aware_broadcast only gates a broadcast decision — the slightly
-    # larger alias-row count is a conservative stand-in for index rows)
-    wikify_stats: dict = {}
-    links = wikify(source, index, k=args.k, salt=args.salt, stats=wikify_stats)
-    if args.edges:
-        edges = (
-            spark.read.table(args.edges)
-            if "/" not in args.edges
-            else spark.read.parquet(args.edges)
-        )
-        links = canonicalize_links(links, edges)
-    triples = links_to_triples(links, index, idx_rows=wikify_stats["idx_rows"])
-    stats = write_triples(triples, args.out, resume=args.resume)
     print(json.dumps(stats))
     if not pre_existing:
         spark.stop()

@@ -195,10 +195,10 @@ def ngram_label_matches(r: RetrievalInputs) -> DataFrame:
 
 
 def _trigram_sets(strings: DataFrame) -> DataFrame:
-    """(id, g, n) set table of distinct char-3-gram sets, one per string."""
+    """(id, g, n) set table of char-3-gram sets, one per row of the
+    distinct `strings`."""
     return (
-        strings.distinct()
-        .withColumn("g", F.array_distinct(char_ngrams(F.col("id"), 3)))
+        strings.withColumn("g", F.array_distinct(char_ngrams(F.col("id"), 3)))
         .withColumn("n", F.size("g"))
         .where(F.col("n") > 0)
     )
@@ -220,7 +220,10 @@ def _scored_string_pairs(r: RetrievalInputs) -> DataFrame:
     # a_sets is referenced 3x (gram df, prefix explode, verify join-back)
     # over a distinct exchange + interpreted char-ngram lambda per alias
     # (measured A/B: 1.7-1.8 -> 1.3-1.4s noop at the 10x replica)
-    a_sets = barrier(_trigram_sets(r.aliases.select(F.col("alias_norm").alias("id"))))
+    # aliases repeat across qnodes; the labels are distinct already
+    a_sets = barrier(
+        _trigram_sets(r.aliases.select(F.col("alias_norm").alias("id")).distinct())
+    )
     m_sets = _trigram_sets(r.labels.select(F.col("label_clean").alias("id")))
     # gram df (≤ alphabet³ rows) and alias prefixes: hinted by the alias count
     pairs = (

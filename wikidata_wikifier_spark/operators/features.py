@@ -564,25 +564,46 @@ def embedding_centroid_score(
 ) -> DataFrame:
     """score-using-embedding --column-vector-strategy centroid
     (wikifier.py:191-195), LOF-free variant: centroid of anchor-candidate
-    embeddings, then cosine(candidate, centroid).
-
-    cosine(candidate, centroid) depends ONLY on the qnode, so the explode/
-    dot-product runs over the DISTINCT-qnode table (|entities|×dim rows,
-    not candidates×dim). The anchor centroid keeps row multiplicity via
-    per-qnode anchor counts (one tiny partial-agg shuffle). Centroid
-    components are rounded to 6 decimals before the cosine so the score is
-    reproducible across engines and partition orders. See
-    embedding_centroid_lof_score for the LOF-outlier-dropping variant.
+    embeddings, then cosine(candidate, centroid). The anchor centroid keeps
+    row multiplicity via per-qnode anchor counts (one tiny partial-agg
+    shuffle), scored by centroid_cosine_scores. The centroid-of-lof variant
+    (queries.q_centroid_lof) feeds the same tail the LOF survivors of
+    lof_surviving_anchors with weight 1.
 
     emb_dim: the (qnode, embedding) dimension, so the embedding array is
     never carried on the candidate table."""
     w_expr = F.col(weight_col) if weight_col else F.lit(1)
-    anchor_counts = (
+    anchors = (
         cands.where(F.col(anchor_col) == 1)
         .groupBy("qnode")
         .agg(F.sum(w_expr).alias("w"))
     )
-    a_emb = anchor_counts.join(size_aware_broadcast(emb_dim, dim_rows), "qnode")
+    return centroid_cosine_scores(
+        cands, anchors, emb_dim, out, emb_col=emb_col, dim_rows=dim_rows
+    )
+
+
+def centroid_cosine_scores(
+    cands: DataFrame,
+    anchors: DataFrame,
+    emb_dim: DataFrame,
+    out: str,
+    emb_col: str = "embedding",
+    dim_rows: int | None = None,
+) -> DataFrame:
+    """cosine(candidate, centroid) joined back onto cands, where the
+    centroid is the w-weighted mean of the embeddings of `anchors`
+    (qnode, w) — pure relational algebra (posexplode + weighted avg +
+    cosine fold), the SQL-expressible tail of both centroid strategies.
+
+    cosine(candidate, centroid) depends ONLY on the qnode, so the explode/
+    dot-product runs over the DISTINCT-qnode table (|entities|×dim rows,
+    not candidates×dim). Centroid components are rounded to 6 decimals
+    before the cosine so the score is reproducible across engines and
+    partition orders."""
+    a_emb = anchors.select("qnode", "w").join(
+        size_aware_broadcast(emb_dim, dim_rows), "qnode"
+    )
     centroid = (
         a_emb.select("w", F.posexplode(emb_col).alias("i", "v"))
         .groupBy("i")
@@ -646,7 +667,7 @@ def _lof_scores(x: "np.ndarray", k: int) -> "np.ndarray":
 
 def lof_surviving_anchors(
     cands: DataFrame,
-    emb_dim: DataFrame | None = None,
+    emb_dim: DataFrame,
     anchor_col: str = "pseudo_gt",
     emb_col: str = "embedding",
     k: int = LOF_K,
@@ -657,7 +678,7 @@ def lof_surviving_anchors(
     """The LOF-INLIER anchor qnodes — the single non-SQL-expressible step
     of centroid-of-lof, factored out so callers can materialize it to the
     oracle handoff and let DuckDB verify the (pure SQL) centroid + cosine
-    tail exactly (VERDICT r04 #5).
+    tail, centroid_cosine_scores with weight 1, exactly (VERDICT r04 #5).
 
     Plan: the anchor set is the DISTINCT anchor qnodes' embeddings —
     entity-scale, not candidate-scale — deterministically capped at
@@ -671,8 +692,6 @@ def lof_surviving_anchors(
     fallback)."""
     import pandas as pd
 
-    if emb_dim is None:
-        emb_dim = cands.groupBy("qnode").agg(F.first(emb_col).alias(emb_col))
     anchors = (
         cands.where(F.col(anchor_col) == 1)
         .select("qnode")
@@ -702,88 +721,6 @@ def lof_surviving_anchors(
         anchors.withColumn("_g", F.lit(1))
         .groupBy("_g")
         .applyInPandas(survivors, "qnode string")
-    )
-
-
-def centroid_cosine_scores(
-    cands: DataFrame,
-    anchor_qnodes: DataFrame,
-    emb_dim: DataFrame,
-    out: str,
-    emb_col: str = "embedding",
-    dim_rows: int | None = None,
-) -> DataFrame:
-    """cosine(candidate, centroid-of(anchor_qnodes)) joined back onto
-    cands — pure relational algebra (posexplode + avg + cosine fold), the
-    SQL-expressible tail of both centroid strategies. Centroid components
-    are rounded to 6 decimals before the cosine so the score reproduces
-    across engines and partition orders (same discipline as
-    embedding_centroid_score)."""
-    a_emb = anchor_qnodes.select("qnode").join(
-        size_aware_broadcast(emb_dim, dim_rows), "qnode"
-    )
-    centroid = (
-        a_emb.select(F.posexplode(emb_col).alias("i", "v"))
-        .groupBy("i")
-        .agg(F.round(F.avg("v"), 6).alias("c"))
-    )
-    qn = (
-        cands.select("qnode")
-        .distinct()
-        .join(size_aware_broadcast(emb_dim, dim_rows), "qnode")
-        .select("qnode", F.posexplode(emb_col).alias("i", "v"))
-    )
-    scores = (
-        qn.join(F.broadcast(centroid), "i")
-        .groupBy("qnode")
-        .agg(
-            F.sum(F.col("v") * F.col("c")).alias("dot"),
-            F.sum(F.col("v") * F.col("v")).alias("nv"),
-            F.sum(F.col("c") * F.col("c")).alias("nc"),
-        )
-        .withColumn(
-            out,
-            F.when(F.col("nv") * F.col("nc") == 0, F.lit(0.0)).otherwise(
-                F.round(F.col("dot") / (F.sqrt("nv") * F.sqrt("nc")), 6)
-            ),
-        )
-        .select("qnode", out)
-    )
-    return cands.join(size_aware_broadcast(scores, dim_rows), "qnode", "left").na.fill(
-        {out: 0.0}
-    )
-
-
-def embedding_centroid_lof_score(
-    cands: DataFrame,
-    emb_dim: DataFrame | None = None,
-    anchor_col: str = "pseudo_gt",
-    emb_col: str = "embedding",
-    out: str = "pgt_centroid_lof_score",
-    k: int = LOF_K,
-    threshold: float = LOF_THRESHOLD,
-    max_anchors: int = LOF_MAX_ANCHORS,
-    dim_rows: int | None = None,
-) -> DataFrame:
-    """score-using-embedding --column-vector-strategy centroid-of-lof
-    (wikifier.py:191-195): LOF-filter the anchor embeddings, centroid the
-    INLIERS only, then cosine(candidate, centroid) — one noisy pseudo-GT
-    anchor no longer skews the centroid.
-
-    Composition of lof_surviving_anchors (numpy LOF, rows-only checkable)
-    and centroid_cosine_scores (pure SQL — and since r05 ORACLE-checked
-    end-to-end via the survivor-set parquet handoff in
-    queries.q_centroid_lof). LOF's numeric behavior stays pinned by
-    tests/test_lof.py against the planted outliers in
-    datagen.entity_rows."""
-    if emb_dim is None:
-        emb_dim = cands.groupBy("qnode").agg(F.first(emb_col).alias(emb_col))
-    surv = lof_surviving_anchors(
-        cands, emb_dim=emb_dim, anchor_col=anchor_col, emb_col=emb_col,
-        k=k, threshold=threshold, max_anchors=max_anchors, dim_rows=dim_rows,
-    )
-    return centroid_cosine_scores(
-        cands, surv, emb_dim, out, emb_col=emb_col, dim_rows=dim_rows
     )
 
 

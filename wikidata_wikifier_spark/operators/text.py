@@ -1,8 +1,8 @@
-"""Text analysis operators (build brief): language-ID heuristic, quality
-scoring, token counting, document fingerprinting. All native expressions
-over the `documents` table — these are the per-document map stages of a
-training-data pipeline, so they MUST stay in whole-stage codegen (no
-Python) to survive 100 TB scans.
+"""Text analysis (build brief): language-ID heuristic, quality scoring,
+token counting and document fingerprinting, fused in text_profile. All
+native expressions over the `documents` table — these are the
+per-document map stages of a training-data pipeline, so they MUST stay in
+whole-stage codegen (no Python) to survive 100 TB scans.
 """
 
 from __future__ import annotations
@@ -28,74 +28,18 @@ def _stopword_hits(toks: Column, words: list[str]) -> Column:
     return F.size(F.filter(toks, lambda t: F.array_contains(arr, t)))
 
 
-def lang_id(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Stopword-profile language ID: per-language hit counts over word
-    tokens, argmax with alphabetical tie-break ('und' → de, 'the' → en...).
-    Emits per-lang scores + predicted lang."""
-    toks = word_tokens(F.col(text_col))
-    out = docs.select(id_col, toks.alias("_toks"))
-    for lang in sorted(LANG_PROFILES):
-        out = out.withColumn(f"score_{lang}", _stopword_hits(F.col("_toks"), LANG_PROFILES[lang]))
-    best = F.greatest(*[F.col(f"score_{lang}") for lang in sorted(LANG_PROFILES)])
-    pred: Column = F.lit("unknown")
-    for lang in sorted(LANG_PROFILES, reverse=True):
-        pred = F.when((best > 0) & (F.col(f"score_{lang}") == best), F.lit(lang)).otherwise(pred)
-    return out.drop("_toks").withColumn("pred_lang", pred)
-
-
-def quality_score(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Heuristic document quality: length band + punctuation ratio +
-    stopword ratio + mean token length, combined to [0,1]."""
-    text = norm_text(F.col(text_col))
-    toks = word_tokens(F.col(text_col))
-    n_chars = F.length(text)
-    n_toks = F.size(toks)
-    n_punct = F.length(F.regexp_replace(text, r"[A-Za-z0-9\s]+", ""))
-    all_stop = sorted({w for ws in LANG_PROFILES.values() for w in ws})
-    n_stop = _stopword_hits(toks, all_stop)
-
-    len_ok = (n_chars >= 20) & (n_chars <= 20000)
-    punct_ratio = F.when(n_chars == 0, F.lit(1.0)).otherwise(n_punct / n_chars)
-    stop_ratio = F.when(n_toks == 0, F.lit(0.0)).otherwise(n_stop / n_toks)
-    mean_tok_len = F.when(n_toks == 0, F.lit(0.0)).otherwise(
-        (n_chars - (n_toks - 1)) / n_toks
-    )
-    tok_len_ok = (mean_tok_len >= 2.0) & (mean_tok_len <= 12.0)
-
-    score = (
-        len_ok.cast("int") * 0.4
-        + (punct_ratio <= 0.2).cast("int") * 0.2
-        + (stop_ratio >= 0.01).cast("int") * 0.2
-        + tok_len_ok.cast("int") * 0.2
-    )
-    return docs.select(
-        id_col,
-        n_chars.alias("n_chars_norm"),
-        n_toks.alias("n_tokens"),
-        F.round(punct_ratio, 6).alias("punct_ratio"),
-        F.round(stop_ratio, 6).alias("stopword_ratio"),
-        F.round(mean_tok_len, 6).alias("mean_token_len"),
-        F.round(score, 6).alias("quality"),
-    )
-
-
-def token_counts(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Whitespace token count + BPE-ish regex token count (words and
-    single punctuation marks — the pre-tokenization a BPE tokenizer sees)."""
-    ws = F.size(word_tokens(F.col(text_col)))
-    bpe = F.size(F.regexp_extract_all(F.col(text_col), F.lit(BPE_ISH_TOKEN_RE), 0))
-    return docs.select(
-        id_col, ws.alias("ws_tokens"), bpe.alias("bpe_tokens"),
-        F.length(text_col).alias("n_chars_raw"),
-    )
-
-
 def text_profile(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """All four text-analysis operators in ONE document scan: language-ID
-    scores + prediction, quality metrics, token counts, fingerprints.
-    Column semantics are identical to lang_id / quality_score /
-    token_counts / fingerprint (their oracles pin each family); fusing them
-    matters at 100 TB — four separate passes over the corpus become one
+    """All four text-analysis families in ONE document scan (the
+    `text_analysis` oracle pins every column):
+    - language ID: stopword-profile hit counts per language (score_<lang>),
+      argmax with alphabetical tie-break (pred_lang, 'unknown' on no hit);
+    - quality: length band + punctuation ratio + stopword ratio + mean
+      token length, combined to [0,1];
+    - token counts: whitespace tokens + BPE-ish regex tokens (words and
+      single punctuation marks, the pre-tokenization a BPE tokenizer sees);
+    - fingerprints: md5 of the sorted distinct word tokens (OpenRefine
+      key collision) + a polynomial rolling hash of the normalized text.
+    One scan matters at 100 TB: four passes over the corpus become one
     projection inside a single whole-stage-codegen'd scan."""
     text = norm_text(F.col(text_col))
     toks = word_tokens(F.col(text_col))
@@ -157,20 +101,3 @@ def text_profile(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
         )
     )
     return out.drop("_t", "_norm", "_toks")
-
-
-def fingerprint(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Key-collision fingerprint (OpenRefine style): sorted distinct
-    word tokens joined + md5 — robust to reordering/duplication; plus a
-    polynomial rolling hash over the normalized text for shift-detection."""
-    sorted_tokens = F.array_join(F.array_sort(F.array_distinct(word_tokens(F.col(text_col)))), " ")
-    rolling = F.aggregate(
-        F.split(norm_text(F.col(text_col)), ""),
-        F.lit(0).cast("long"),
-        lambda acc, ch: F.pmod(acc * 31 + F.coalesce(F.ascii(ch), F.lit(0)), F.lit(1_000_000_007)),
-    )
-    return docs.select(
-        id_col,
-        F.md5(sorted_tokens).alias("fingerprint"),
-        rolling.alias("rolling_hash"),
-    )

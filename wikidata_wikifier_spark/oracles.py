@@ -1338,15 +1338,15 @@ ORACLES: dict[str, str] = {
     + """,
     top1 AS MATERIALIZED (
         SELECT row, qnode, class FROM (
-            SELECT f11.row, f11.qnode, f11.class,
+            SELECT f11.row, f11.qnode, f11.class, f11.retrieval_score,
                    row_number() OVER (PARTITION BY f11.row
                        ORDER BY f11.retrieval_score DESC, f11.qnode ASC) AS rank
             FROM f11)
-        WHERE rank = 1
+        WHERE rank = 1 AND retrieval_score > 0.95
     ),
     trip AS (
         SELECT qnode AS subj, 'P:mentionedIn' AS pred,
-               'part:' || CAST(row AS VARCHAR) AS obj
+               'part:' || CAST(row AS VARCHAR) || '@' AS obj
         FROM top1
         UNION ALL
         SELECT DISTINCT qnode, 'P31', class FROM top1

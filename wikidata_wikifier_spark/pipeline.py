@@ -7,7 +7,8 @@ This is the Spark re-expression of the reference's three `tl` chains
 barriers only where fan-out would re-execute expensive stages. The feature
 chain (wikifier.py:148-205) is composed once, in feature_chain: wikify runs
 it label-level, and the oracle-checked board (queries.featured_candidates)
-runs the same function row-level.
+runs the same function row-level. The graph build is composed once, in
+build_graph: job.py and streaming/wikify_stream.py both call it.
 """
 
 from __future__ import annotations
@@ -16,10 +17,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType
 
+from . import triples
 from .operators import candidates as cand_ops
 from .operators import features, ranker, topk
 from .operators.connected_components import connected_components
 from .operators.mentions import detect_mentions
+from .plans import checkpoint
 from .plans.barrier import barrier
 from .plans.skew import size_aware_broadcast
 from .schemas import CONTEXT_ENTRY
@@ -142,9 +145,9 @@ def wikify(
     LINKS table (top-k per mention + match flag), sha256 carried through.
 
     stats: pass a dict to receive {"idx_rows": <alias-index row count>} —
-    the size hint label_candidates computes anyway (one count job). Callers
-    that need a hint for their own index-side joins (job.py's typing join
-    in links_to_triples) reuse it instead of re-scanning the index.
+    the size hint label_candidates computes anyway (one count job).
+    build_graph reuses it for the typing join in links_to_triples instead
+    of re-scanning the index.
 
     LABEL-LEVEL EXECUTION: every retrieval score, string similarity,
     ranker feature, MLP prediction, rank, and match flag depends only on
@@ -249,22 +252,51 @@ def wikify(
     )
 
 
-def canonicalize_links(
-    links: DataFrame, alias_edges: DataFrame, comp_rows: int | None = None
-) -> DataFrame:
+def canonicalize_links(links: DataFrame, alias_edges: DataFrame) -> DataFrame:
     """Connected components over sameAs edges → rewrite each linked qnode
     to its component representative (north_rule canonicalization).
 
     The component map is NODE-scale (the sameAs graph can approach index
-    scale), so the join is size-aware: hintless → shuffle join with AQE
-    promotion, never a forced driver broadcast of an index-sized map."""
+    scale), so the join is hintless: a shuffle join with AQE promotion,
+    never a forced driver broadcast of an index-sized map."""
     comp = connected_components(alias_edges)
     return (
-        links.join(
-            size_aware_broadcast(comp.withColumnRenamed("node", "qnode"), comp_rows),
-            "qnode",
-            "left",
-        )
+        links.join(comp.withColumnRenamed("node", "qnode"), "qnode", "left")
         .withColumn("canonical_qnode", F.coalesce(F.col("component"), F.col("qnode")))
         .drop("component")
     )
+
+
+def build_graph(
+    source: DataFrame,
+    index: DataFrame,
+    out: str,
+    *,
+    edges: DataFrame | None,
+    k: int,
+    salt: int | None,
+    resume: bool,
+) -> dict:
+    """source-repo table → triples written under `out`: wikify →
+    canonicalize_links (when sameAs `edges` are given) → links_to_triples →
+    write_triples. Returns the writer's stats. The one graph-build path of
+    the batch job (job.py) and of every streaming micro-batch
+    (streaming/wikify_stream.py).
+
+    One count job serves every size hint: wikify's label_candidates counts
+    the alias index anyway and hands it back through `stats`; the typing
+    join reuses that number instead of re-scanning the index. The hint
+    only gates a broadcast decision, and the alias count (≥ the index row
+    count) is a conservative stand-in.
+
+    The triple and writer layers are called through their modules
+    (`triples.links_to_triples`, `checkpoint.write_triples`), where the
+    traced benchmark (kgbench/run.py) patches them."""
+    wikify_stats: dict = {}
+    links = wikify(source, index, k=k, salt=salt, stats=wikify_stats)
+    if edges is not None:
+        links = canonicalize_links(links, edges)
+    out_triples = triples.links_to_triples(
+        links, index, idx_rows=wikify_stats["idx_rows"]
+    )
+    return checkpoint.write_triples(out_triples, out, resume=resume)

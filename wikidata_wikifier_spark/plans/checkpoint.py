@@ -42,9 +42,9 @@ def _digest(triples: DataFrame) -> DataFrame:
 
 # ---------------------------------------------------------------- writer
 # ONE writer seam for the partitioned graph table. The engine's layout is
-# format-agnostic: `part` is bucket(NUM_PARTS, subj) computed as a column
-# (triples.py::part_of). The format switch maps it to the target table
-# format's native partitioning:
+# format-agnostic: `part` is the md5 bucket of subj (NUM_PARTS buckets)
+# computed as a column (triples.py::part_of). The format switch maps it to
+# the target table format's native partitioning:
 #   parquet  → write.partitionBy("part")            (hive-style dirs)
 #   iceberg  → table PARTITIONED BY the same precomputed `part` column
 #              (identity transform over part_of's hash-bucket — byte-same
@@ -92,8 +92,8 @@ def write_partitioned(
                 "TRIPLE_TABLE_FORMAT=iceberg needs an Iceberg catalog "
                 "(spark.sql.catalog.graph = org.apache.iceberg.spark."
                 "SparkCatalog with a warehouse); none is configured in "
-                "this session. The parquet layout is bucket-compatible "
-                "with PARTITIONED BY (bucket(NUM_PARTS, subj))."
+                "this session. The table is PARTITIONED BY the "
+                "precomputed `part` column, the parquet layout."
             )
         table = f"graph.`{out_dir}`.triples"
         writer = triples.repartition("part").writeTo(table)

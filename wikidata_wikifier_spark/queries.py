@@ -393,7 +393,7 @@ def q_centroid_lof(spark: SparkSession, sf_dir: str) -> DataFrame:
     surv = features.lof_surviving_anchors(f, emb_dim=emb_dim, dim_rows=n)
     path, fp_cols = _handoff(spark, sf_dir, "lof_survivors")
     surv.select("qnode", *fp_cols).write.mode("overwrite").parquet(path)
-    back = spark.read.parquet(path).select("qnode")
+    back = spark.read.parquet(path).select("qnode", F.lit(1).alias("w"))
     out = features.centroid_cosine_scores(
         f, back, emb_dim, out="pgt_centroid_lof_score", dim_rows=n
     )
@@ -577,34 +577,26 @@ def q_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_triples_emit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Links → (subj,pred,obj,part) triples: provenance + P31 typing."""
-    from .plans.skew import size_aware_broadcast
-    from .triples import NUM_PARTS
+    """Links → (subj,pred,obj,part) triples through the emitter the graph
+    build ships (triples.links_to_triples): top-1 by retrieval_score, the
+    match rule on that score, provenance + P31 typing. A fixture row stands
+    in for a file: repo "part", path <row>, no content hash."""
+    from .triples import links_to_triples
 
-    f = featured_candidates(spark, sf_dir)
-    cls = entity_index(spark, sf_dir).select("qnode", "class")
-    links = (
-        topk.get_kg_links(f, k=1, score_col="retrieval_score")
-        .join(size_aware_broadcast(cls, index_rows(spark, sf_dir)), "qnode")
-        .select("row", "qnode", "class")
+    links = topk.apply_match_rule(
+        topk.get_kg_links(
+            featured_candidates(spark, sf_dir), k=1, score_col="retrieval_score"
+        ),
+        "retrieval_score",
+    ).select(
+        F.lit("part").alias("repo"),
+        F.col("row").cast("string").alias("path"),
+        F.lit("").alias("content_sha256"),
+        "qnode",
+        "match",
     )
-    mentioned = links.select(
-        F.col("qnode").alias("subj"),
-        F.lit("P:mentionedIn").alias("pred"),
-        F.concat(F.lit("part:"), F.col("row").cast("string")).alias("obj"),
-    )
-    typed = links.select(
-        F.col("qnode").alias("subj"),
-        F.lit("P31").alias("pred"),
-        F.col("class").alias("obj"),
-    ).distinct()
-    triples = mentioned.unionByName(typed)
-    return triples.withColumn(
-        "part",
-        F.pmod(
-            F.conv(F.substring(F.md5("subj"), 1, 15), 16, 10).cast("long"),
-            F.lit(NUM_PARTS),
-        ).cast("int"),
+    return links_to_triples(
+        links, entity_index(spark, sf_dir), idx_rows=index_rows(spark, sf_dir)
     )
 
 

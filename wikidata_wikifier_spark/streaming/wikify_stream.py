@@ -23,8 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from ..pipeline import canonicalize_links, wikify
-from ..triples import links_to_triples
+from .. import pipeline
 
 
 def wikify_stream(
@@ -36,35 +35,28 @@ def wikify_stream(
     k: int = 1,
     on_batch=None,
 ):
-    """source-repo file stream → triples appended to out_dir per batch.
+    """source-repo file stream → triples appended to out_dir per batch:
+    each micro-batch runs pipeline.build_graph into out_dir/batch_<id>,
+    the batch job's graph-build path.
 
     on_batch: optional callable(batch_id, write_stats) invoked after each
     batch's triple write — the metrics hook (and the crash-injection seam
     the mid-stream resume test uses). An exception here, or anywhere in
     the batch, fails the query BEFORE the batch commits to the streaming
     checkpoint; on restart the batch REPLAYS with the same id and
-    write_triples' per-partition manifest makes the replay a no-op
+    the triple writer's per-partition manifest makes the replay a no-op
     (skipped_parts == its previously written parts) — the exactly-once
     story is (streaming checkpoint) × (partition manifest).
 
     Returns the StreamingQuery; callers stop it or await termination.
     """
-    from ..plans.checkpoint import write_triples
-
-    # long-lived dimension: size it ONCE outside the batch loop — the hint
-    # steers the per-batch typing join's broadcast decision without
-    # re-counting the index every micro-batch
-    idx_rows = index.count()
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        links = wikify(batch_df, index, k=k)
-        if edges is not None:
-            links = canonicalize_links(links, edges)
-        triples = links_to_triples(links, index, idx_rows=idx_rows)
-        stats = write_triples(
-            triples, f"{out_dir}/batch_{batch_id}", resume=True
+        stats = pipeline.build_graph(
+            batch_df, index, f"{out_dir}/batch_{batch_id}",
+            edges=edges, k=k, salt=None, resume=True,
         )
         if on_batch is not None:
             on_batch(batch_id, stats)

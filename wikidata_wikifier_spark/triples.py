@@ -2,12 +2,14 @@
 (north_rule: "materializes (subj, pred, obj) triples into partitioned
 Iceberg graph tables with per-partition lineage and metrics").
 
-Partition key: hash-bucket of subj (NUM_PARTS buckets) — uniform even for
-head entities because the bucket is on the canonical subject, and triple
-volume per subject is bounded by mention count, which AQE skew-split
-handles during the upstream join. Parquet partitionBy here; on a cluster
-the same write targets an Iceberg table partitioned by `part` (bucket
-transform).
+Partition key: md5 hash-bucket of subj (NUM_PARTS buckets) — uniform even
+for head entities because the bucket is on the canonical subject, and
+triple volume per subject is bounded by mention count, which AQE
+skew-split handles during the upstream join. The bucket is
+md5_long(subj) % NUM_PARTS (functions/hashing.py), which DuckDB
+reproduces, so the `triples_emit` oracle checks the partition column too.
+Parquet partitionBy here; on a cluster the same write targets an Iceberg
+table partitioned by `part` (bucket transform).
 """
 
 from __future__ import annotations
@@ -15,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .functions.hashing import md5_long
 from .plans.barrier import barrier
 
 NUM_PARTS = 16
@@ -24,22 +27,19 @@ PRED_INSTANCE_OF = "P31"
 
 
 def part_of(col):
-    return F.pmod(F.abs(F.hash(col)), F.lit(NUM_PARTS)).cast("int")
+    return (md5_long(col) % NUM_PARTS).cast("int")
 
 
 def links_to_triples(
-    links: DataFrame,
-    index: DataFrame,
-    alias_components: DataFrame | None = None,
-    only_matches: bool = True,
-    idx_rows: int | None = None,
+    links: DataFrame, index: DataFrame, idx_rows: int | None = None
 ) -> DataFrame:
-    """Emit per link:
+    """Emit per matched link (match == 1):
     - (canonical_qnode, P:mentionedIn, repo:path@sha)   provenance triple
     - (qnode, P:sameAs, canonical_qnode)                 when canonicalized
     - (canonical_qnode, P31, class)                      entity typing
+    plus the `part` bucket of subj.
     """
-    base = links.where(F.col("match") == 1) if only_matches else links
+    base = links.where(F.col("match") == 1)
     subj = F.coalesce(F.col("canonical_qnode"), F.col("qnode"))
     if "canonical_qnode" not in base.columns:
         base = base.withColumn("canonical_qnode", F.col("qnode"))
